@@ -78,7 +78,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // iterative default: 5 on a default run, but follow an explicit
     // SPARK_GRAFT_BENCH_RUNS (a RUNS=1 smoke run shouldn't still pay
@@ -92,17 +91,7 @@ object Bench {
     try java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get("target/bench_summary.json"))
     catch { case _: Throwable => }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions",
-        "graft.expressions.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        graft.util.Scratch.path("warehouse"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Session.build()
     val loadBefore = loadAvg()
     // untimed warmup: JIT/codegen/parquet-footer paths, one cheap
     // query per table family

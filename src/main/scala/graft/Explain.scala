@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspection helper: prints the formatted physical plan of the
   * named queries (or all) against a scale dir — the `.explain`
@@ -9,17 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions",
-        "graft.expressions.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        graft.util.Scratch.path("warehouse"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Session.build()
     val names = if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     for (n <- names) {

@@ -6,18 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions",
-        "graft.expressions.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        graft.util.Scratch.path("warehouse"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Session.build()
     val only = SparkEntry.nameFilter()
     dump(spark, sfDir, outDir, only)
     spark.stop()

@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.Lineage
 
 /** Corpus-preparation operators for LLM training pipelines: PII
   * redaction, eval-set decontamination, repetition quality signals,
@@ -603,7 +604,7 @@ object CorpusOps {
     // prunedVerdict) — checkpoint-materialize, or the n·k assignment
     // cosines and the corpus scan execute twice per call (the semDedup
     // idiom; persist would be pointless on a lazily-returned frame)
-    val assigned = Dedup.materialize(
+    val assigned = Lineage.materialize(
       Similarity.assignNearestCellScored(cb, c, "vec_id", "c_emb"))
     val radii = assigned
       .select(col("cell"), nanvl(col("cscore"), lit(-1.0)).as("__cs"))

@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.Lineage
 
 /** Document deduplication operators (north-star extension).
   *
@@ -29,81 +30,6 @@ object Dedup {
 
   /** Largest prime below 2^30 — keeps `a·h + b` within int64. */
   val P: Long = 1073741789L
-
-  /** Materialize a result and CUT ITS LINEAGE via a checkpoint.
-    * Lineage truncation is the point: unpersisting an internal index
-    * after `persist+count` INVALIDATES every dependent cache entry
-    * (Spark rebuilds dependents lazily), silently forcing a full
-    * recompute on the next access — measured as a 2-3× slowdown on
-    * q19/q20/q61 before this was understood. A checkpointed frame is a
-    * LogicalRDD with no dependency to invalidate.
-    *
-    * WHICH checkpoint matters for cost. A reliable
-    * `Dataset.checkpoint(eager = true)` executes the plan TWICE — the
-    * eager count is one job, and the checkpoint write is a SECOND job
-    * that recomputes the RDD from lineage (Spark's own scaladoc says
-    * "strongly recommended that this RDD is persisted" for exactly
-    * this reason) — and then every consumer re-reads the partitions
-    * from checkpoint files on disk. `localCheckpoint(eager = true)`
-    * marks the RDD MEMORY_AND_DISK-persisted and materializes it in
-    * the ONE eager job; consumers read the stored blocks. Measured on
-    * the r19 bench this halves the materialization cost of every
-    * iterative operator (graph loops, LSH candidate frames, star
-    * contraction).
-    *
-    * Mode (`spark.graft.materialize` = auto|local|reliable, default
-    * auto): `auto` uses the local checkpoint in local mode — a lost
-    * block there means the JVM died, so reliability buys nothing —
-    * and the reliable one on a cluster, where executor loss must not
-    * kill a long job and the checkpoint doubles as a shared-FS
-    * artifact. Cluster deployments that prefer speed over
-    * fault-tolerance can pin `local` explicitly.
-    *
-    * Reliable-path dir handling: in local mode an unset dir defaults
-    * to the JVM tmpdir and is deleted on JVM exit (checkpoint files
-    * are otherwise never reclaimed unless
-    * `spark.cleaner.referenceTracking.cleanCheckpoints` is on). On a
-    * real cluster a driver-local default would scatter partition files
-    * across executors' disks and fail on read — so there we FAIL FAST
-    * and require an explicit shared `setCheckpointDir`. */
-  private[graft] def materialize(df: DataFrame): DataFrame =
-    if (useLocalCheckpoint(df.sparkSession)) df.localCheckpoint(eager = true)
-    else {
-      ensureCheckpointDir(df.sparkSession.sparkContext)
-      df.checkpoint(eager = true)
-    }
-
-  /** Resolve `spark.graft.materialize` (see [[materialize]]). */
-  private[graft] def useLocalCheckpoint(
-      spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.get("spark.graft.materialize", "auto") match {
-      case "local" => true
-      case "reliable" => false
-      case "auto" => spark.sparkContext.isLocal
-      case other => sys.error("spark.graft.materialize must be " +
-        s"auto|local|reliable, got '$other'")
-    }
-
-  /** The checkpoint dir currently in force (as Spark reports it — a
-    * UUID leaf under the directory passed to `setCheckpointDir`),
-    * creating the local-mode tmp-dir default (reclaimed at JVM exit)
-    * if none is set — shared by [[materialize]] and callers that scope
-    * per-batch checkpoint subdirectories
-    * ([[graft.streaming.CorpusStreams.assignBatch]]). */
-  private[graft] def ensureCheckpointDir(
-      sc: org.apache.spark.SparkContext): String =
-    sc.getCheckpointDir.getOrElse {
-      if (!sc.isLocal)
-        sys.error("graft: reliable checkpointing on a cluster needs " +
-          "an explicit shared checkpoint dir — call " +
-          "sparkContext.setCheckpointDir(<shared path>) first")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-checkpoints")
-      sc.setCheckpointDir(dir.toString)
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        graft.util.Scratch.deleteTree(dir)))
-      sc.getCheckpointDir.get
-    }
 
   /** Ceiling (bytes) for the PPJoin broadcast-verify sets frame —
     * AUTO-SIZED from the memory the broadcast actually has to fit in,
@@ -419,9 +345,10 @@ object Dedup {
         if (smallSets) verified.distinct() else verified
       }
     // stage the (small) pair result while the index is still cached,
-    // then release the index — see [[materialize]] for why this must
-    // be a lineage-cutting checkpoint, not persist+count
-    val out = materialize(result)
+    // then release the index — see [[graft.util.Lineage.materialize]]
+    // for why this must be a lineage-cutting checkpoint, not
+    // persist+count
+    val out = Lineage.materialize(result)
     sh0.unpersist(false)
     Some(out)
   }
@@ -597,7 +524,7 @@ object Dedup {
     // estimated jaccard = fraction of agreeing signature positions
     val sigA = sigPrefixed(sig, "a", "id_a")
     val sigB = sigPrefixed(sig, "b", "id_b")
-    val result = materialize(
+    val result = Lineage.materialize(
       cand.join(sigA, Seq("id_a")).join(sigB, Seq("id_b"))
         .withColumn("est_jaccard", sigAgreement(numHashes, "a", "b"))
         .select("id_a", "id_b", "est_jaccard"))
@@ -706,7 +633,7 @@ object Dedup {
     val hamming = (0 until nBlocks).map(i =>
       bit_count(col(s"a_b_$i").bitwiseXOR(col(s"b_b_$i"))))
       .reduce(_ + _)
-    val result = materialize(
+    val result = Lineage.materialize(
       cand.join(sigPrefixed(blocks, "a", "id_a"), Seq("id_a"))
         .join(sigPrefixed(blocks, "b", "id_b"), Seq("id_b"))
         .withColumn("hamming", hamming.cast("int"))
@@ -733,31 +660,35 @@ object Dedup {
     * large-star/small-star variant halves diameters per round — same
     * join shapes, noted as the upgrade path.
     *
-    * Each round's labels are checkpoint-materialized ([[materialize]])
-    * — the standard practice for iterative algorithms: it bounds the
-    * plan (no per-round lineage growth) and leaves no cache entries to
-    * invalidate. The returned frame is likewise materialized.
+    * Each round's labels are checkpoint-materialized
+    * ([[graft.util.Lineage.materialize]]) — the standard practice for
+    * iterative algorithms: it bounds the plan (no per-round lineage
+    * growth) and leaves no cache entries to invalidate. The returned
+    * frame is likewise materialized.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame = {
-    val edges = materialize(
+    val edges = Lineage.materialize(
       pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
         .unionByName(
           pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
         .distinct())
-    var labels = materialize(edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
+    var labels = Lineage.materialize(
+      edges.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id")))
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
       val nbrMin = edges
         .join(labels.withColumnRenamed("id", "src"), Seq("src"))
         .groupBy(col("dst").as("id")).agg(min(col("label")).as("nbr"))
-      val next = materialize(labels.withColumnRenamed("label", "old")
-        .join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("old"), coalesce(col("nbr"), col("old"))).as("label"),
-          col("old")))
+      val next = Lineage.materialize(
+        labels.withColumnRenamed("label", "old")
+          .join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("old"), coalesce(col("nbr"), col("old")))
+              .as("label"),
+            col("old")))
       converged = next.filter(col("label") =!= col("old")).isEmpty
       labels = next.select("id", "label")
       i += 1
@@ -825,29 +756,6 @@ object Dedup {
       .select(col("y").as("x"), col("__mn").as("y"))
       .unionByName(minsX.select(col("x"), col("__mn").as("y")))
       .distinct()
-  }
-
-  /** Eager checkpoint that RETURNS the materialization count and
-    * content fingerprint, via
-    * [[org.apache.spark.sql.graft.CheckpointBridge]] — the loop below
-    * needs them every iteration, and the stock `checkpoint(eager=true)`
-    * discards its internal count, forcing a second full action per
-    * iteration to recover it. Follows the [[materialize]] mode: the
-    * local-checkpoint form computes the frame ONCE (the stats
-    * aggregate doubles as the persisting job) where the reliable form
-    * pays a second recompute-and-write job. (Other materializers
-    * measured SLOWER here: a parquet scratch round-trip loses the
-    * distinct's output partitioning that the checkpointed LogicalRDD
-    * preserves for the next round's aggregations, +50% across
-    * q61/q78/q97/q99; persist-then-reliable-checkpoint and batching
-    * two contraction rounds per barrier both added more job/stage
-    * latency than they saved.) */
-  private[graft] def materializeWithStats(
-      df: DataFrame): (DataFrame, Long, Long) = {
-    val local = useLocalCheckpoint(df.sparkSession)
-    if (!local) ensureCheckpointDir(df.sparkSession.sparkContext)
-    org.apache.spark.sql.graft.CheckpointBridge.checkpointWithStats(df,
-      local)
   }
 
   /** Deduplicated edge count below which the star loop collects the
@@ -935,7 +843,7 @@ object Dedup {
     // of the (possibly expensive, un-materialized) pair generation.
     // Measured on q99: the labels' nodes leg re-ran the whole
     // per-batch candidate generation at write time, ~2.5 s per batch.
-    val (edges0, edge0Count, edge0Fp) = materializeWithStats(pairs
+    val (edges0, edge0Count, edge0Fp) = Lineage.materializeWithStats(pairs
       .select(greatest(col(aCol), col(bCol)).as("x"),
         least(col(aCol), col(bCol)).as("y"))
       .distinct())
@@ -982,7 +890,7 @@ object Dedup {
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val (next, nextCount, nextFp) = materializeWithStats(
+      val (next, nextCount, nextFp) = Lineage.materializeWithStats(
         contractOnce(edges))
       // both sides are distinct sets, so equal counts + one-sided
       // containment ⇒ equality; the count+fingerprint gate (free off
@@ -1014,7 +922,7 @@ object Dedup {
     val labels = stars.unionByName(
       nodes.join(stars, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("doc_id").as("cluster_rep")))
-    if (materializeResult) materialize(labels) else labels
+    if (materializeResult) Lineage.materialize(labels) else labels
   }
 
   /** Apply near-dup clustering to a corpus — the step that turns
@@ -1258,7 +1166,7 @@ object Dedup {
           .select("id_a", "id_b", "inter", "size_a", "size_b", "jaccard")
         if (smallSets) verified.distinct() else verified
       }
-    val out = materialize(result)
+    val out = Lineage.materialize(result)
     dfa0.unpersist()
     dfb0.unpersist()
     pa0.unpersist()
@@ -1728,7 +1636,7 @@ object Dedup {
       .withColumn("block", substring(col("key"), 1, blockChars))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("block").orderBy("key", "id")
-    val ranked = Dedup.materialize(
+    val ranked = Lineage.materialize(
       keyed.withColumn("r", row_number().over(w)))
     // rank-bucket band join: a probes its own bucket and the next
     // one (every rb in (ra, ra+window] lands in one of the two), so

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Lineage
 
 /** Iterative graph analytics over edge frames. First citizen:
   * PageRank centrality, the canonical-document selector of a dedup
@@ -83,7 +84,7 @@ object Graph {
     // materialized once: the loop joins this frame every iteration,
     // and its lineage (e.g. a minhash candidate generation) must not
     // re-execute per round
-    val adjDeg = Dedup.materialize(adj.join(deg, Seq("src")))
+    val adjDeg = Lineage.materialize(adj.join(deg, Seq("src")))
     val nodes = adjDeg.select(col("src").as("doc_id")).distinct()
     val n = nodes.count()
     require(n > 0, "pageRank: empty edge set")
@@ -131,7 +132,7 @@ object Graph {
       .where(col("u") =!= col("v") &&
         col("u").isNotNull && col("v").isNotNull)
       .distinct()
-    val eM = Dedup.materialize(e)
+    val eM = Lineage.materialize(e)
     val deg = eM.select(col("u").as("n")).unionByName(
         eM.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
@@ -154,7 +155,7 @@ object Graph {
     val dv = deg.select(col("n").as("v"), col("d").as("dv"))
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = Dedup.materialize(
+    val oriented = Lineage.materialize(
       eM.join(du, Seq("u")).join(dv, Seq("v"))
         .select(
           when(uFirst, col("u")).otherwise(col("v")).as("src"),
@@ -209,7 +210,7 @@ object Graph {
       .where(col("u") =!= col("v") &&
         col("u").isNotNull && col("v").isNotNull)
       .distinct()
-    val eM = Dedup.materialize(e)
+    val eM = Lineage.materialize(e)
     val deg = eM.select(col("u").as("n")).unionByName(
         eM.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
@@ -218,7 +219,7 @@ object Graph {
     val dv = deg.select(col("n").as("v"), col("d").as("dv"))
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = Dedup.materialize(
+    val oriented = Lineage.materialize(
       eM.join(du, Seq("u")).join(dv, Seq("v"))
         .select(
           when(uFirst, col("u")).otherwise(col("v")).as("src"),
@@ -282,8 +283,8 @@ object Graph {
       .where(col("src") =!= col("dst"))
       .distinct()
     val deg = adj.groupBy("src").agg(count(lit(1)).as("deg"))
-    val adjDeg = Dedup.materialize(adj.join(deg, Seq("src")))
-    val seedSet = Dedup.materialize(
+    val adjDeg = Lineage.materialize(adj.join(deg, Seq("src")))
+    val seedSet = Lineage.materialize(
       seeds.select(col(seedCol).as("doc_id"))
         .where(col("doc_id").isNotNull).distinct())
     val nSeeds = seedSet.count()
@@ -357,7 +358,7 @@ object Graph {
       .where(col("u") =!= col("v") &&
         col("u").isNotNull && col("v").isNotNull)
       .distinct()
-    val eM = Dedup.materialize(e)
+    val eM = Lineage.materialize(e)
     val keep = Dedup.h60(concat_ws(":",
       col("u"), col("v"), lit(seed))) % pDen < pNum
     val sampled = eM.where(keep)
@@ -405,7 +406,7 @@ object Graph {
       .distinct()
     val adj = e.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(e.select(col("v").as("src"), col("u").as("dst")))
-    val adjM = Dedup.materialize(adj)
+    val adjM = Lineage.materialize(adj)
     val deg = adjM.groupBy("src").agg(count(lit(1)).as("d"))
     val nodeStats = deg.agg(
       count(lit(1)).cast("long").as("n_nodes"),
@@ -454,8 +455,9 @@ object Graph {
     *
     * Scale shape per round: one edge⋈label equi-join + one
     * (node,label) count + one per-node argmax window (rows per node
-    * ≤ |labels|). The label frame is [[Dedup.materialize]]d each
-    * round so round k+1 never re-executes round k's lineage.
+    * ≤ |labels|). The label frame is materialized
+    * ([[graft.util.Lineage.materialize]]) each round so round k+1
+    * never re-executes round k's lineage.
     *
     * `edges` is one row per undirected edge (aCol, bCol) —
     * symmetrized here; `seeds` carries (aCol, labelCol).
@@ -502,7 +504,7 @@ object Graph {
     // (materializeWithStats — the CC loop's idiom, r20): the separate
     // count() action per round was a second full job wave over the
     // just-checkpointed frame
-    val (adj00, nEdges0, _) = Dedup.materializeWithStats(adj0)
+    val (adj00, nEdges0, _) = Lineage.materializeWithStats(adj0)
     var adj = adj00
     var nEdges = nEdges0
     var r = 0
@@ -510,7 +512,7 @@ object Graph {
     while (!converged && r < rounds) {
       val keep = adj.groupBy("src").agg(count(lit(1)).as("__d"))
         .where(col("__d") >= k).select("src")
-      val (next, n, _) = Dedup.materializeWithStats(
+      val (next, n, _) = Lineage.materializeWithStats(
         adj.join(keep, Seq("src"))
           .join(keep.withColumnRenamed("src", "dst"), Seq("dst"))
           .select("src", "dst"))
@@ -557,7 +559,7 @@ object Graph {
       .distinct()
       .join(lab.select(col("n").as("u"), col("lab").as("lu")), Seq("u"))
       .join(lab.select(col("n").as("v"), col("lab").as("lv")), Seq("v"))
-    val eM = Dedup.materialize(e)
+    val eM = Lineage.materialize(e)
     val m = eM.agg(count(lit(1)).as("m"))
     val perLabel = eM
       .select(col("u").as("n"), col("lu").as("lab"),
@@ -598,7 +600,7 @@ object Graph {
   def bfsHops(edges: DataFrame, aCol: String, bCol: String,
       seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val adj = Dedup.materialize(edges
+    val adj = Lineage.materialize(edges
       .select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionByName(edges.select(col(bCol).as("src"),
         col(aCol).as("dst")))
@@ -612,7 +614,7 @@ object Graph {
     // already-checkpointed frontiers — re-checkpointing the union
     // each round paid a second job wave to copy rows that were all
     // already in checkpointed frames (r20)
-    val (f0, nSeeds, _) = Dedup.materializeWithStats(
+    val (f0, nSeeds, _) = Lineage.materializeWithStats(
       s0.withColumn("hop", lit(0)))
     var frontier = f0
     var visited = frontier
@@ -620,7 +622,7 @@ object Graph {
     var exhausted = nSeeds == 0L
     while (!exhausted && h < maxHops) {
       h += 1
-      val (next, nNext, _) = Dedup.materializeWithStats(
+      val (next, nNext, _) = Lineage.materializeWithStats(
         adj.join(frontier.select(col("n").as("src")), Seq("src"))
           .select(col("dst").as("n")).distinct()
           .join(visited.select("n"), Seq("n"), "left_anti")
@@ -663,7 +665,7 @@ object Graph {
       iters: Int, scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val D38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val e = Dedup.materialize(edges
+    val e = Lineage.materialize(edges
       .select(col(srcCol).as("c"), col(dstCol).as("s"))
       .where(col("c").isNotNull && col("s").isNotNull)
       .distinct())
@@ -673,14 +675,14 @@ object Graph {
     for (_ <- 1 to iters) {
       val aRaw = e.join(h, Seq("c"))
         .groupBy("s").agg(sum(col("h").cast(D38)).as("x"))
-      a = Dedup.materialize(
+      a = Lineage.materialize(
         aRaw.crossJoin(broadcast(aRaw.agg(max(col("x")).as("mx"))))
           .select(col("s"),
             expr(s"CAST(x * $scale AS DECIMAL(38,0)) div mx")
               .as("a")))
       val hRaw = e.join(a, Seq("s"))
         .groupBy("c").agg(sum(col("a").cast(D38)).as("x"))
-      h = Dedup.materialize(
+      h = Lineage.materialize(
         hRaw.crossJoin(broadcast(hRaw.agg(max(col("x")).as("mx"))))
           .select(col("c"),
             expr(s"CAST(x * $scale AS DECIMAL(38,0)) div mx")
@@ -701,12 +703,12 @@ object Graph {
       .unionByName(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
       .where(col("src") =!= col("dst"))
       .distinct()
-    val adjM = Dedup.materialize(adj)
+    val adjM = Lineage.materialize(adj)
     val seed = seeds
       .select(col(aCol).as("node"), col(labelCol).as("label"))
       .where(col("node").isNotNull && col("label").isNotNull)
       .distinct()
-    var labels = Dedup.materialize(seed)
+    var labels = Lineage.materialize(seed)
     for (_ <- 0 until iters) {
       val votes = adjM
         .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
@@ -726,7 +728,7 @@ object Graph {
         .agg(min_by(col("label"),
           struct((-col("__c")).as("nc"), col("label").as("lb")))
           .as("label"))
-      labels = Dedup.materialize(labels.unionByName(newly))
+      labels = Lineage.materialize(labels.unionByName(newly))
     }
     labels
   }

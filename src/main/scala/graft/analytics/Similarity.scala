@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.util.Lineage
 
 /** Similarity search over an embedding column (north-star extension;
   * SURVEY §2.9).
@@ -1072,7 +1073,7 @@ object Similarity {
   private def twoLevelBucketed(emb: DataFrame, idCol: String,
       embCol: String, cb: DataFrame, bits2: Int, dim: Int,
       tables: Int): DataFrame =
-    Dedup.materialize(withResidualBuckets(
+    Lineage.materialize(withResidualBuckets(
       nearestCell(cb, emb.select(col(idCol).as("vec_id"),
         col(embCol).cast("array<double>").as("embedding")),
         "vec_id", "embedding"),
@@ -1231,7 +1232,7 @@ object Similarity {
     // persisted cell table
     val bucketed = twoLevelBucketed(emb, idCol, embCol, cb, bits2,
       dim, tables)
-    val verdict = Dedup.materialize(
+    val verdict = Lineage.materialize(
       twoLevelVerdict(bucketed, threshold, tables))
     bucketed.join(verdict.select(col("vec_id"), col("kept")),
         Seq("vec_id"))
@@ -1323,7 +1324,7 @@ object Similarity {
       .withColumn("__dom", lit(true))
     // the verdict is consumed twice (the state append below and the
     // caller) — materialize so the scoring pipeline runs once
-    val verdict = Dedup.materialize(nb.select("vec_id", "cell")
+    val verdict = Lineage.materialize(nb.select("vec_id", "cell")
       .join(nearCnt, Seq("vec_id"), "left")
       .join(dominated, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"),
@@ -1468,7 +1469,7 @@ object Similarity {
     // checkpoint-materialize, or the crossed assignment recomputes
     // per consumer (no persist: the returned frame is lazy, so there
     // would be no point to unpersist at)
-    val cells = Dedup.materialize(nearestCell(cb, emb
+    val cells = Lineage.materialize(nearestCell(cb, emb
         .select(col(idCol).as("vec_id"),
           col(embCol).cast("array<double>").as("embedding")),
       "vec_id", "embedding"))

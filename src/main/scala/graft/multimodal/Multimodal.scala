@@ -586,7 +586,7 @@ object Multimodal {
     // checkpoint-materialize so the dominant cost (payload decode +
     // per-frame hashing) runs once, not once per consumer (the
     // semDedup discipline)
-    val fh = graft.analytics.Dedup.materialize(
+    val fh = graft.util.Lineage.materialize(
       videoFrameAHashes(media).toDF()
         .select(col("media_id"), col("ahash")).distinct())
     val sizes = fh.groupBy("media_id")

@@ -700,7 +700,7 @@ object GeoQueries {
         val enrichedF = (0L until 4L).map { b =>
           scala.concurrent.Future {
             val batch = ev.filter(col("bi") === b)
-            graft.analytics.Dedup.materialize(
+            graft.util.Lineage.materialize(
               Spatial.nearestStationBucketed(s,
                   batch.select("event_id", "plat", "plon"),
                   "event_id", "plat", "plon", "q290_stations", w)

@@ -1074,7 +1074,7 @@ object SimilarityQueries {
     // residual tables' fold-difference buckets, and the within-bucket
     // prune — parameters pinned (k1=8, bits2=2, t=2) like q103; the
     // auto sizing rules (k1 = ceil(n^1/3) capped, 2^bits ∝ n/k1) are
-    // spec-pinned and measured by ScaleProbe semdedup2.
+    // spec-pinned.
     {
       val k1 = 8; val dim = 64; val iters = 2; val tau = "0.35"
       val bits2 = 2; val tables = 2

@@ -41,7 +41,7 @@ object CorpusPipeline {
     // cut, the whole verdict subtree (two regex profiles per doc, the
     // exact-dup window, the contamination shingle join) re-executed
     // once per consumer (measured 3x in the r20 q240 job trace)
-    val keptIds = graft.analytics.Dedup.materialize(
+    val keptIds = graft.util.Lineage.materialize(
       verdict.where(col("kept") === 1).select(idCol))
     val keptDocs = corpus.join(keptIds, Seq(idCol))
     val cand = Dedup.minHashLshCandidates(keptDocs, idCol, textCol,

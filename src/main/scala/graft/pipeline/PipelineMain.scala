@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -26,14 +26,8 @@ object PipelineMain {
     val fixtures = opts.getOrElse("fixtures", "src/test/resources/fixtures")
     val out = opts.getOrElse("out", "/tmp/graft_warehouse")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Session.build(
+      master = sys.env.get("SPARK_MASTER"))
 
     def emptyDf(schema: StructType) = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -116,10 +110,8 @@ object PipelineMain {
           .mode(SaveMode.Overwrite)
           .partitionBy("part_year", "part_month").parquet(factPath)
         spark.catalog.refreshByPath(factPath)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(s"${factPath}_migrated"))
+        graft.util.Scratch.deleteTree(
+          java.nio.file.Paths.get(s"${factPath}_migrated"))
         println("[pipeline] weather: migrated flat fact to monthly partitions")
       }
       val (dim, fact) = Pipeline.weatherBatch(spark,

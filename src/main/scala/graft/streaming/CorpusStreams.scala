@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.analytics.Dedup
+import graft.util.Lineage
 
 /** Streaming corpus operators: the per-batch form of the dedup tier —
   * a document stream is incrementally deduplicated against everything
@@ -114,17 +115,10 @@ object CorpusStreams {
     // the path depth stays constant batch over batch.
     val sc = spark.sparkContext
     val ckptRoot = new org.apache.hadoop.fs.Path(
-      Dedup.ensureCheckpointDir(sc)).getParent
+      Lineage.ensureCheckpointDir(sc)).getParent
     val batchCkpt = new org.apache.hadoop.fs.Path(ckptRoot,
       s"batch-${java.util.UUID.randomUUID()}")
     var oldSigCache: Option[DataFrame] = None
-    val trace = sys.env.contains("GRAFT_BATCH_TRACE")
-    var t0 = System.nanoTime()
-    def mark(phase: String): Unit = if (trace) {
-      val t = System.nanoTime()
-      System.err.println(f"[batch-trace] $phase ${(t - t0) / 1e9}%.3f")
-      t0 = t
-    }
     sc.setCheckpointDir(batchCkpt.toString)
     try {
       val newSig = Dedup.minHashSignature(fresh, "doc_id", "text",
@@ -175,10 +169,8 @@ object CorpusStreams {
             .select("new_id", "old_id")
         }
 
-      mark("setup")
       val assigned = Dedup.incrementalAssignTagged(no, nn, oldAssign,
         offset)
-      mark("assign")
       // every batch doc lands in the state exactly once: matched docs
       // with their component rep, the rest (unmatched, or too short to
       // shingle) as their own rep
@@ -203,9 +195,7 @@ object CorpusStreams {
       // splits
       try {
         newSig.hint("rebalance").write.mode("append").parquet(sPath)
-        mark("sigWrite")
         all.hint("rebalance").write.mode("append").parquet(aPath)
-        mark("assignWrite")
       } finally newSig.unpersist(false)
     } finally {
       fresh.unpersist(false)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.util.Lineage
 
 /** Structured Streaming surface (SURVEY §2.8). The reference's
   * "near-real-time" is a daily batch pull with a 24 h freshness SLA;
@@ -177,11 +178,13 @@ object EventStreams {
     * them).
     *
     * `getTarget`/`setTarget` abstract the table storage. This variant
-    * is the in-memory test harness — the per-batch `localCheckpoint`
-    * truncates the otherwise batch-over-batch-growing plan lineage,
-    * an executor-local materialization acceptable only in single-node
-    * use. Production streams should use [[mergeStreamToPath]], where
-    * the lake table itself is the cross-batch state.
+    * is the in-memory test harness — the per-batch
+    * [[graft.util.Lineage.materialize]] truncates the otherwise
+    * batch-over-batch-growing plan lineage, with the engine's
+    * checkpoint mode (a local checkpoint in local mode, a reliable one
+    * on a cluster). Production streams should use
+    * [[mergeStreamToPath]], where the lake table itself is the
+    * cross-batch state.
     */
   def mergeStream(events: DataFrame, keys: Seq[String],
       updateCols: Seq[String],
@@ -193,7 +196,7 @@ object EventStreams {
           org.apache.spark.sql.Row], _: Long) =>
         val merged = graft.warehouse.Merge.upsert(
           getTarget(), batch.toDF(), keys, updateCols, tiebreak)
-        setTarget(merged.localCheckpoint(true))
+        setTarget(Lineage.materialize(merged))
       }
 
   /** Durable streaming upsert: each micro-batch merges into a

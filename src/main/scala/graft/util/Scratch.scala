@@ -41,8 +41,8 @@ object Scratch {
   def path(tag: String): String = s"$root/$tag"
 
   /** Best-effort recursive delete (IOExceptions swallowed) — THE one
-    * tree-delete shared by every cleanup hook in the codebase (scratch
-    * root, local checkpoint dir, spec temp dirs). */
+    * local tree-delete in the codebase (the scratch root's exit hook,
+    * PipelineMain's layout migration). */
   private[graft] def deleteTree(p: Path): Unit =
     try {
       if (Files.exists(p)) {

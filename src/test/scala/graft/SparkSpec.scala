@@ -11,15 +11,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   import org.apache.spark.sql.functions._
 
-  /** A spec-scoped temp directory, deleted on JVM exit — specs were
-    * leaving one `graft-*` dir per `Files.createTempDirectory` call
-    * in /tmp across runs; routing through here bounds the debris to
-    * the test JVM's lifetime. */
-  def tmpDir(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(tag)
-    SparkSpec.cleanupOnExit(p)
-    p.toString
-  }
+  /** A spec-scoped temp directory under the per-JVM
+    * [[graft.util.Scratch]] root, so the root's exit hook reclaims it
+    * with everything else the test JVM wrote. */
+  def tmpDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(graft.util.Scratch.root), tag).toString
 
   /** Evaluate a Column over a single empty row. */
   def eval(c: Column): Any =
@@ -40,31 +37,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  private val tracked =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[java.nio.file.Path]())
-  private lazy val hook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tracked.forEach(graft.util.Scratch.deleteTree),
-      "graft-spec-tmp-cleanup"))
-
-  private[graft] def cleanupOnExit(p: java.nio.file.Path): Unit = {
-    hook
-    tracked.add(p): Unit
-  }
-
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.warehouse.dir",
-        graft.util.Scratch.path("warehouse"))
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Pinned at `local[4]` so specs see the same partitioning on any
+    * machine. */
+  lazy val session: SparkSession = graft.util.Session.build(cores = 4)
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.{CorpusStreams, EventStreams}
 import graft.streaming.EventStreams.{Event, Spike}
+import graft.util.Lineage
 
 /** Structured Streaming semantics over an in-memory source: windowed
   * rollups, stateful spike detection, sessionization (SURVEY §2.8).
@@ -465,7 +466,7 @@ class StreamingSpec extends SparkSpec {
       "checkpointed frame held across the batch survives") {
     import spark.implicits._
     val sc = spark.sparkContext
-    val base = graft.analytics.Dedup.ensureCheckpointDir(sc)
+    val base = Lineage.ensureCheckpointDir(sc)
     // a concurrent holder's checkpoint, taken BEFORE the batch runs
     val held = Seq(1, 2, 3).toDF("v").checkpoint(eager = true)
     val dir = tmpDir("graft-ckptscope")
@@ -492,7 +493,7 @@ class StreamingSpec extends SparkSpec {
       "leaving the session scope untouched") {
     import spark.implicits._
     val sc = spark.sparkContext
-    val before = graft.analytics.Dedup.ensureCheckpointDir(sc)
+    val before = Lineage.ensureCheckpointDir(sc)
     val dir = tmpDir("graft-badbatch")
     intercept[Exception] {
       // no `text` column — analysis must fail while the session scope
