@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,6 +12,22 @@ import org.apache.spark.sql.types._
   * pushdown happen automatically because these are plain declarative
   * parquet scans — at 100 TB each of these becomes a partitioned,
   * statistics-pruned distributed scan with no code change.
+  *
+  * Schema inference reads the parquet footer through a Spark job, so
+  * an uncached load costs one job before the query does any work.
+  * A corpus table is one file, and its inferred schema is kept for the
+  * life of the JVM, keyed by the qualified path, the file's length and
+  * modification time (one `getFileStatus` per load), and the session's
+  * explicitly set `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*`
+  * values (the settings Spark's schema converter reads, including the
+  * `nanosAsLong` that [[loadEvents]] turns on). A later load with the
+  * same key reads with that schema pinned and launches no job.
+  * A regenerated file changes length or mtime and is inferred again,
+  * so [[assertSchema]] and the `events.ts` dispatch always see the file
+  * on disk — with one exception, the contract of this cache: a rewrite
+  * that keeps BOTH the length and the modification time of the old
+  * file is served the old schema. A directory path is inferred on
+  * every load, since a directory's mtime does not track its files.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -18,9 +37,43 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df =
       if (name == "events") loadEvents(spark, dir)
-      else spark.read.parquet(s"$dir/$name.parquet")
+      else readParquet(spark, s"$dir/$name.parquet")
     assertSchema(name, df)
     if (SpreadTables(name)) spreadSmallScan(spark, df) else df
+  }
+
+  private final case class SchemaKey(path: String, length: Long,
+      mtime: Long, parquetConf: Map[String, String])
+
+  /** Inferred schemas of single parquet files, JVM-wide (see the
+    * object doc for the key). One small entry per file version. */
+  private val inferred = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** `spark.read.parquet(path)`, minus the inference job when `path`
+    * is a file whose schema is cached under the same key. A directory
+    * or a missing path reads exactly as `spark.read.parquet` does. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val status =
+      try Some(p.getFileSystem(spark.sessionState.newHadoopConf())
+        .getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.filter(_.isFile) match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val key = SchemaKey(st.getPath.toString, st.getLen,
+          st.getModificationTime, spark.conf.getAll.filter { case (k, _) =>
+            k.startsWith("spark.sql.parquet.") ||
+            k.startsWith("spark.sql.legacy.parquet.")
+          })
+        Option(inferred.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            inferred.put(key, df.schema)
+            df
+        }
+    }
   }
 
   /** Tables whose consumers do heavy PER-ROW work on the scan side
@@ -81,7 +134,9 @@ object Tables {
     * TIMESTAMP(NANOS) → timestamp[us], 2026-08-13); this turns any future
     * drift into one diagnosable error naming the table, column, and found
     * type instead of dozens of opaque downstream analysis failures.
-    * Schema-only check — no Spark job is triggered.
+    * The check itself runs no Spark job: it reads the schema the load
+    * already resolved — inferred by one footer job on a cache miss,
+    * pinned from the schema cache on a hit (see the object doc).
     */
   private val expectedSchemas: Map[String, Seq[(String, DataType => Boolean)]] = {
     val integral: DataType => Boolean =
@@ -158,7 +213,7 @@ object Tables {
     */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = readParquet(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType => // TIMESTAMP(NANOS) surfaced as raw nanos longs
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -34,14 +34,6 @@ object TextAnalysis {
   /** Languages in deterministic (alphabetical) preference order. */
   val langs: Seq[String] = stopwords.keys.toSeq.sorted
 
-  /** Stopword-hit ratio for one language profile. */
-  def langScore(text: Column, lang: String): Column = {
-    val toks = tokens(text)
-    val set = stopwords(lang)
-    size(filter(toks, t => t.isin(set: _*))).cast("double") /
-      size(toks).cast("double")
-  }
-
   /** All language scores as one array ([[langs]] order) over an
     * already-bound token array — a single pass over the tokens per
     * language. */
@@ -84,18 +76,10 @@ object TextAnalysis {
 
   // --- quality scoring (Gopher-style repetition/shape gates) --------
 
-  /** Mean token length = non-whitespace chars / token count. */
-  def meanTokenLen(text: Column): Column =
-    length(regexp_replace(text, "\\s", "")).cast("double") /
-      size(tokens(text)).cast("double")
-
   /** Punctuation-to-character ratio. */
   def punctRatio(text: Column): Column =
     length(regexp_replace(text, "[^.,!?;:]", "")).cast("double") /
       greatest(length(text), lit(1)).cast("double")
-
-  /** English stopword-hit ratio (a Gopher-style "natural text" gate). */
-  def stopRatio(text: Column): Column = langScore(text, "en")
 
   /** One-pass quality profile: struct(n_tokens, mean_token_len,
     * stop_ratio, punct_ratio, quality_score) from a single tokenize —
@@ -126,13 +110,6 @@ object TextAnalysis {
             gates.size).as("quality_score"))
       }), lit(0))
     }), lit(0))
-
-  /** Composite document quality score in [0,1]: equal-weight gates on
-    * token count, mean token length, stopword presence, and low
-    * punctuation density.
-    */
-  def qualityScore(text: Column): Column =
-    qualityProfile(text).getField("quality_score")
 
   // --- token counting ----------------------------------------------
 

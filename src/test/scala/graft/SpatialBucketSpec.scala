@@ -151,31 +151,6 @@ class SpatialBucketSpec extends SparkSpec {
     assert(e.getMessage.contains("rebucket"))
   }
 
-  /** Spark jobs launched by `body`, counted deterministically: a
-    * sentinel job after the body flushes the (FIFO) listener bus, so
-    * when the sentinel is observed every job the body started has
-    * been counted. */
-  private def jobsLaunchedBy(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // sentinel: an RDD count is EXACTLY one job (a DataFrame count
-      // under AQE is two), so jobs-minus-one is the body's count
-      spark.sparkContext.parallelize(Seq(1), 1).count(): Unit
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (n.get() == 0 && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(n.get() >= 1, "sentinel job never observed")
-      n.get() - 1
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("persisted station stats: width + count live in the catalog, " +
       "reading them launches NO job, auto probe matches explicit") {
     val w = Spatial.bucketStationsAuto(stations, "sid", "slat", "slon",
