@@ -106,10 +106,10 @@ object Tables {
     * Scale posture (guide §2.5 "input skew … repartition immediately
     * after the read"): the spread fires only when the scan has fewer
     * splits than `defaultParallelism` AND the relation is at least
-    * `spark.graft.spreadScanMinBytes` (default 256 KB; 0 disables) —
-    * at any realistic warehouse scale the scan already has more splits
-    * than cores and this is a planning-time no-op, and trivially small
-    * dimensions (nation, region) skip the pointless exchange. Filters
+    * [[SpreadScanMinBytes]] (256 KB) — at any realistic warehouse
+    * scale the scan already has more splits than cores and this is a
+    * planning-time no-op, and trivially small dimensions (nation,
+    * region) skip the pointless exchange. Filters
     * and column pruning push through a Repartition node, so
     * PushedFilters/ReadSchema at the scan are unchanged (checked in
     * the r19 plan audit); round-robin repartition is
@@ -118,15 +118,14 @@ object Tables {
     * determinism contract. */
   private def spreadSmallScan(spark: SparkSession,
       df: DataFrame): DataFrame = {
-    val minBytes = spark.conf.get("spark.graft.spreadScanMinBytes",
-      "262144").toLong
-    if (minBytes <= 0L) return df
     val par = spark.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= par) df
     else if (df.queryExecution.optimizedPlan.stats.sizeInBytes <
-        BigInt(minBytes)) df
+        BigInt(SpreadScanMinBytes)) df
     else df.repartition(par)
   }
+
+  private val SpreadScanMinBytes = 262144L
 
   /** Accepted logical shapes per corpus table: column → admissible Spark
     * types. The driver owns `/root/testdata` and has regenerated it

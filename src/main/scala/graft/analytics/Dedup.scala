@@ -114,6 +114,16 @@ object Dedup {
     docs.select(col(idCol).as("doc_id"),
       explode(shingles(col(textCol), n)).as("shingle"))
 
+  /** The default stop-shingle df cap for a corpus of `nDocs`:
+    * `max(StopShingleFloor, ⌈StopShingleFraction·nDocs⌉)`. The DuckDB
+    * oracles interpolate the same two constants
+    * (`DedupQueries.duckStopShingleCap`). */
+  private[graft] val StopShingleFloor = 64
+  private[graft] val StopShingleFraction = 0.01
+  private[graft] def stopShingleCap(nDocs: Long): Long =
+    math.max(StopShingleFloor.toLong,
+      math.ceil(StopShingleFraction * nDocs).toLong)
+
   /** 2. Exact n-gram Jaccard pairs ≥ threshold, via a prefix-filtered
     * inverted-index join (the PPJoin family — Bayardo et al. WWW'07,
     * Xiao et al. WWW'08; both public).
@@ -156,9 +166,8 @@ object Dedup {
     * dedup in practice (stop-shingle / stop-word capping — Broder '97
     * onward): when `maxDf` is not given, shingles appearing in more
     * than `max(floor, ceil(fraction·corpus))` documents are treated as
-    * boilerplate and excluded from the Jaccard universe, with
-    *   floor    = spark.graft.jaccardStopShingleFloor    (default 64)
-    *   fraction = spark.graft.jaccardStopShingleFraction (default 0.01)
+    * boilerplate and excluded from the Jaccard universe, with the
+    * floor and fraction of [[stopShingleCap]] (64 and 0.01).
     * The floor keeps small corpora (< ~6.4k docs) on effectively-exact
     * semantics — a shingle in 64+ docs there is pure boilerplate — and
     * the fraction keeps the candidate join linear at scale. Callers
@@ -189,20 +198,15 @@ object Dedup {
       autoStopShingles: Boolean,
       abortBudget: Option[Long],
       knownCount: Option[Long] = None): Option[DataFrame] = {
-    val conf = docs.sparkSession.conf
     val effMaxDf: Option[Int] = maxDf.orElse {
       if (!autoStopShingles) None
       else {
-        val floor = conf.get("spark.graft.jaccardStopShingleFloor", "64").toInt
-        val fraction =
-          conf.get("spark.graft.jaccardStopShingleFraction", "0.01").toDouble
         // one count-star over the input (parquet scans answer it from
         // footer metadata); the cap must exist before the df filter —
         // the auto router already counted for its maxDocs gate and
         // threads that count in, so the probe path scans once
         val nDocs = knownCount.getOrElse(docs.count())
-        Some(math.max(floor.toLong, math.ceil(fraction * nDocs).toLong)
-          .min(Int.MaxValue).toInt)
+        Some(stopShingleCap(nDocs).min(Int.MaxValue).toInt)
       }
     }
     // the index feeds both sides of the pair self-join — persist it so
@@ -954,9 +958,8 @@ object Dedup {
     * same Σdf² shape as exact Jaccard, so the SAME DEFAULTS apply:
     * the stop-shingle df cap is ON unless the caller opts out
     * (`autoStopShingles = false`) or passes an explicit `maxDf` —
-    * `max(spark.graft.jaccardStopShingleFloor (64),
-    * ⌈spark.graft.jaccardStopShingleFraction (0.01)·corpus⌉)`,
-    * mirroring [[ngramJaccardPairs]]. Containment sizes and
+    * [[stopShingleCap]] of the corpus size, mirroring
+    * [[ngramJaccardPairs]]. Containment sizes and
     * intersections then both come from the capped universe. The cap
     * is adaptively DROPPED (one scalar max-df job) when no shingle
     * exceeds it, so small corpora keep exact semantics AND the
@@ -971,16 +974,9 @@ object Dedup {
       autoStopShingles: Boolean = true): DataFrame = {
     require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
       s"containment threshold must be a rational in (0,1]: $tauNum/$tauDen")
-    val conf = docs.sparkSession.conf
     val effMaxDf: Option[Long] = maxDf.orElse {
       if (!autoStopShingles) None
-      else {
-        val floor = conf.get("spark.graft.jaccardStopShingleFloor", "64").toInt
-        val fraction =
-          conf.get("spark.graft.jaccardStopShingleFraction", "0.01").toDouble
-        val nDocs = docs.count()
-        Some(math.max(floor.toLong, math.ceil(fraction * nDocs).toLong))
-      }
+      else Some(stopShingleCap(docs.count()))
     }
     val sh0 = shingleIndex(docs, idCol, textCol, n)
     val sh = effMaxDf match {
@@ -1013,11 +1009,10 @@ object Dedup {
     * Shingle universe and stop-shingle cap are defined over the
     * COMBINED corpus (boilerplate in either side is boilerplate for
     * the comparison); the default cap mirrors [[ngramJaccardPairs]]
-    * (`spark.graft.jaccardStopShingle{Floor,Fraction}`, floor 64 /
-    * 1% of |A|+|B|), with the same explicit opt-out. Candidate volume
-    * is Σ_h df_A(h)·df_B(h), bounded by the cap — and ADAPTIVELY
-    * guarded like the self-join: one scalar job measures that sum,
-    * and past `spark.graft.jaccardNaiveMaxDf2` the join switches to
+    * ([[stopShingleCap]] of |A|+|B|), with the same explicit opt-out.
+    * Candidate volume is Σ_h df_A(h)·df_B(h), bounded by the cap — and
+    * ADAPTIVELY guarded like the self-join: one scalar job measures
+    * that sum, and past `spark.graft.jaccardNaiveMaxDf2` the join switches to
     * the PPJoin prefix/size/positional-filtered form with exact
     * `array_intersect` verification (broadcast-sided up to
     * [[broadcastSetBytesCeiling]]) — identical rows, bounded
@@ -1035,16 +1030,9 @@ object Dedup {
       idCol: String, textCol: String, n: Int, threshold: Double,
       maxDf: Option[Int] = None,
       autoStopShingles: Boolean = true): DataFrame = {
-    val conf = docsA.sparkSession.conf
     val effMaxDf: Option[Long] = maxDf.map(_.toLong).orElse {
       if (!autoStopShingles) None
-      else {
-        val floor = conf.get("spark.graft.jaccardStopShingleFloor", "64").toInt
-        val fraction =
-          conf.get("spark.graft.jaccardStopShingleFraction", "0.01").toDouble
-        val nDocs = docsA.count() + docsB.count()
-        Some(math.max(floor.toLong, math.ceil(fraction * nDocs).toLong))
-      }
+      else Some(stopShingleCap(docsA.count() + docsB.count()))
     }
     def posts(docs: DataFrame) =
       shingleIndex(docs, idCol, textCol, n)
@@ -1098,8 +1086,8 @@ object Dedup {
       if (!capActive) statRow0.getLong(1)
       else jdf.filter(col("df") <= effMaxDf.get)
         .agg(coalesce(sum(col("p")), lit(0L))).collect()(0).getLong(0)
-    val naiveMax = conf.get("spark.graft.jaccardNaiveMaxDf2",
-      "64000000").toLong
+    val naiveMax = docsA.sparkSession.conf.get(
+      "spark.graft.jaccardNaiveMaxDf2", "64000000").toLong
     val szA = sizes(pa, docsA)
     val szB = sizes(pb, docsB)
     val result =

@@ -598,106 +598,6 @@ object Evaluation {
       .orderBy("class")
   }
 
-  /** Spearman rank-correlation matrix over numeric columns — the
-    * robust (monotone-invariant) companion of the Pearson matrix:
-    * ρ is Pearson correlation of the columns' midranks, so a single
-    * outlier row cannot dominate the statistic the way it does a
-    * raw-moment correlation.
-    *
-    * The textbook computation ranks every row with one global sort
-    * per column. Here each column's rank map is built DISTRIBUTED:
-    * rows collapse to distinct cent values (one keyed shuffle), and
-    * the exact global rank prefix per distinct value comes from the
-    * same two-level prefix-sum used by [[scoreEval]] (range-bucket
-    * offsets over a ≤`buckets`-row frame + within-bucket windows —
-    * no partition ever holds more than one bucket's distinct
-    * values). Rows then join their rank maps back by value — one
-    * keyed shuffle per column, each against a ≤|distinct|-row map.
-    *
-    * Determinism: ranks are kept as 2× midranks (2·|{<v}| + t + 1
-    * for a tie block of size t — always an integer), all power sums
-    * accumulate as DECIMAL(38,0), and each ρ is the same fixed
-    * double sequence as the Pearson matrix. Listwise-complete rows
-    * only, mirroring the Pearson matrix's contract.
-    *
-    * Output: (col_a, col_b, n, rho) for each unordered pair, ordered
-    * by (col_a, col_b).
-    */
-  def spearman(df: DataFrame, cols: Seq[String],
-      buckets: Int = 64): DataFrame = {
-    require(cols.size >= 2, "need at least two columns")
-    val src = df
-      .where(cols.map(col(_).isNotNull).reduce(_ && _))
-      .select(cols.map(c =>
-        (col(c).cast(DecimalType(18, 2)) * 100).cast("long").as(c)): _*)
-    val ranked = cols.foldLeft(src) { (acc, c) =>
-      val rm = prefixRank2x(
-        src.groupBy(col(c).as("v")).agg(count(lit(1)).as("cnt")),
-        buckets).withColumnRenamed("v", c)
-        .withColumnRenamed("r2", s"r_$c")
-      acc.join(rm, Seq(c))
-    }
-    val pairs = for {
-      i <- cols.indices; j <- cols.indices if i < j
-    } yield (cols(i), cols(j))
-    val aggs =
-      Seq(count(lit(1)).as("n")) ++
-        cols.flatMap(c => Seq(
-          sum(d(col(s"r_$c"))).as(s"s_$c"),
-          sum(d(col(s"r_$c")) * col(s"r_$c")).as(s"ss_$c"))) ++
-        pairs.map { case (a, b) =>
-          sum(d(col(s"r_$a")) * col(s"r_$b")).as(s"sp_${a}_$b") }
-    val agg = ranked.agg(aggs.head, aggs.tail: _*)
-    val rows = pairs.map { case (a, b) =>
-      struct(lit(a).as("col_a"), lit(b).as("col_b"),
-        col("n").as("n"),
-        ((d(col("n")) * col(s"sp_${a}_$b") -
-            col(s"s_$a") * col(s"s_$b")).cast("double") /
-          (sqrt((d(col("n")) * col(s"ss_$a") -
-              col(s"s_$a") * col(s"s_$a")).cast("double")) *
-           sqrt((d(col("n")) * col(s"ss_$b") -
-              col(s"s_$b") * col(s"s_$b")).cast("double"))))
-          .as("rho"))
-    }
-    agg.select(explode(array(rows: _*)).as("r"))
-      .select(col("r.col_a").as("col_a"), col("r.col_b").as("col_b"),
-        col("r.n").cast("long").as("n"), col("r.rho").as("rho"))
-      .orderBy("col_a", "col_b")
-  }
-
-  /** Distributed 2×-midrank map over a distinct-value frame
-    * (v: long, cnt: long) → (v, r2) with r2 = 2·|{rows < v}| + cnt
-    * + 1: the [[scoreEval]] prefix-sum (bucket offsets over a tiny
-    * frame + within-bucket windows) without a global sort. Bucket
-    * ids only steer partition layout — the prefixes are
-    * bucket-independent. */
-  private def prefixRank2x(vals: DataFrame, buckets: Int): DataFrame = {
-    require(buckets >= 1, "buckets must be >= 1")
-    val bounds = vals.agg(min("v").as("lo"), max("v").as("hi"))
-      .collect()(0)
-    if (bounds.isNullAt(0))
-      return vals.select(col("v"), col("cnt").as("r2")).where(lit(false))
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val bucket =
-      if (hi <= lo) lit(0)
-      else least(lit(buckets - 1),
-        floor((col("v") - lo).cast("double") /
-          (hi - lo + 1).toDouble * buckets).cast("int"))
-    val gb = vals.withColumn("b", bucket)
-    // |buckets|-row window: single partition is the point
-    val wOff = Window.orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = gb.groupBy("b").agg(sum("cnt").as("bc"))
-      .select(col("b"),
-        coalesce(sum("bc").over(wOff), lit(0L)).as("off"))
-    val wIn = Window.partitionBy("b").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    gb.join(broadcast(offsets), Seq("b"))
-      .select(col("v"),
-        (lit(2) * (col("off") + coalesce(sum("cnt").over(wIn), lit(0L)))
-          + col("cnt") + lit(1)).as("r2"))
-  }
-
   private def emptyReport(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     import s.implicits._

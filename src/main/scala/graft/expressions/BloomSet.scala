@@ -33,7 +33,6 @@ final class BloomSet(val words: Array[Long], val k: Int)
   require(k >= 1 && k <= 32, s"bloom probe count out of range: $k")
   /** Mask over BIT indexes (64 · words, itself a power of two). */
   val mask: Long = words.length.toLong * 64L - 1L
-  def sizeBytes: Long = words.length.toLong * 8L
 }
 
 object BloomSet {

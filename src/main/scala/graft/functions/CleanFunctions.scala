@@ -103,11 +103,6 @@ object CleanFunctions {
     when(tmax.isNotNull && tmin.isNotNull, least(tmax, tmin))
       .otherwise(tmin)
 
-  /** Non-negative gate used for precipitation/solar/wind
-    * (`cleaners.py:286-303`). */
-  def nonNegative(c: Column): Column =
-    when(c.isNull, lit(null)).otherwise(greatest(lit(0d), c))
-
   /** F10 — crop-name standardization (`cleaners.py:445-479`): lowercase →
     * synonym map → else Title Case. The 21-entry map folds to a literal
     * Catalyst CASE, so it broadcasts implicitly and stays codegen'd.
@@ -176,22 +171,6 @@ object CleanFunctions {
     * (`etl/transform/transformers.py:77-79`). */
   def locationHash(lat: Column, lon: Column): Column =
     md5(format_string("%.6f,%.6f", lat.cast("double"), lon.cast("double")))
-
-  /** Idempotency key (`etl/utils/database.py:51-52`):
-    * sha256("{entity_type}:{entity_key}"). */
-  def idempotencyKey(entityType: Column, entityKey: Column): Column =
-    sha2(concat_ws(":", entityType, entityKey), 256)
-
-  /** T15 — extraction confidence score
-    * (`etl/transform/nlp_extractor.py:180-196`). */
-  def confidenceScore(tempMin: Column, tempMax: Column, water: Column,
-      sun: Column, phMin: Column, phMax: Column,
-      evidenceCount: Column): Column = {
-    val has = (c: Column) => c.isNotNull.cast("double")
-    val base = (has(tempMin) * has(tempMax)) * 0.3 + has(water) * 0.3 +
-      has(sun) * 0.2 + (has(phMin) * has(phMax)) * 0.2
-    least(base + least(evidenceCount * 0.05, lit(0.2)), lit(1.0))
-  }
 
   /** W3 — yyyymmdd surrogate date key
     * (`etl/transform/transformers.py:44`). */

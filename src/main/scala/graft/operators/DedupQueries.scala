@@ -28,19 +28,23 @@ object DedupQueries {
        |FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
        |      FROM $from)""".stripMargin
 
+  /** DuckDB form of [[Dedup.stopShingleCap]] over `COUNT(*)`, built
+    * from the same constants. */
+  private val duckStopShingleCap: String =
+    s"greatest(${Dedup.StopShingleFloor}, " +
+      s"ceil(${Dedup.StopShingleFraction} * COUNT(*)))"
+
   /** Stop-shingle-capped 60-bit shingle index + per-doc set sizes,
     * mirroring [[Dedup.ngramJaccardPairs]]'s DEFAULT semantics: shingles
-    * in more than max(64, ⌈1%·corpus⌉) docs are boilerplate and leave
-    * the Jaccard universe (floor/fraction mirror the
-    * `spark.graft.jaccardStopShingle{Floor,Fraction}` defaults — the
-    * driver runs with defaults, so the constants must track them).
+    * in more than [[Dedup.stopShingleCap]] docs are boilerplate and
+    * leave the Jaccard universe.
     * Assumes a CTE named `sh(doc_id, shingle)` is in scope. */
   private def duckCappedShingleCtes: String =
     s"""shh0 AS (SELECT doc_id,
        |  ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h FROM sh),
        |dfreq AS (SELECT h, COUNT(*) AS df FROM shh0 GROUP BY h),
        |shh AS (SELECT doc_id, shh0.h FROM shh0 JOIN dfreq USING (h)
-       |  WHERE df <= (SELECT greatest(64, ceil(0.01 * COUNT(*)))
+       |  WHERE df <= (SELECT $duckStopShingleCap
        |               FROM documents)),
        |sizes AS (SELECT doc_id, COUNT(*) AS set_size
        |          FROM shh GROUP BY doc_id)""".stripMargin
@@ -1104,7 +1108,7 @@ object DedupQueries {
       WITH sh AS (${duckShingleIndex(5)}),
       dfreq AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY shingle),
       shc AS (SELECT doc_id, sh.shingle FROM sh JOIN dfreq USING (shingle)
-        WHERE df <= (SELECT greatest(64, ceil(0.01 * COUNT(*)))
+        WHERE df <= (SELECT $duckStopShingleCap
                      FROM documents)),
       sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shc GROUP BY 1),
       inter AS (

@@ -608,8 +608,7 @@ object IngestQueries {
       ORDER BY o_orderkey""")) { (s, dir) =>
       val fact = graft.Tables.load(s, dir, "orders").select(
         col("o_orderkey"),
-        date_format(col("o_orderdate"), "yyyyMMdd").cast("int")
-          .as("date_key"),
+        CleanFunctions.dateKey(col("o_orderdate")).as("date_key"),
         col("o_totalprice"))
       val path = scratchPath("q93", dir)
       Writer.writeMonthlyPartitioned(fact, "date_key", path)

@@ -41,7 +41,4 @@ object Q {
   def dec(c: Column): Column = c.cast(DecimalType(18, 2))
   /** Exact decimal sum rendered back as a deterministic double. */
   def dsum(c: Column): Column = sum(dec(c)).cast("double")
-  /** Deterministic average: exact decimal sum / count, divided as doubles. */
-  def davg(c: Column): Column =
-    sum(dec(c)).cast("double") / count(c).cast("double")
 }

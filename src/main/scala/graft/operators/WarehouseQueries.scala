@@ -150,8 +150,7 @@ object WarehouseQueries {
       ORDER BY o_orderkey""")) { (s, dir) =>
       val base = Tables.load(s, dir, "orders").select(
         col("o_orderkey"),
-        date_format(col("o_orderdate"), "yyyyMMdd").cast("int")
-          .as("date_key"),
+        CleanFunctions.dateKey(col("o_orderdate")).as("date_key"),
         year(col("o_orderdate")).as("part_year"),
         month(col("o_orderdate")).as("part_month"),
         col("o_totalprice"), col("o_orderstatus"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -37,11 +37,6 @@ object EventStreams {
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
-  /** File-based streaming read of an events directory (parquet parts
-    * appear as micro-batches). */
-  def readEvents(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(eventSchema).parquet(dir)
-
   /** Tumbling-window rollup with watermark — the streaming form of
     * q11_hourly_rollup: per (window, event_type) counts and exact
     * decimal sums. */
@@ -74,16 +69,6 @@ object EventStreams {
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"),
         col("event_type"), col("approx_users"))
-
-  /** Sliding-window mean value per event type. */
-  def slidingAvg(events: DataFrame, watermark: String = "2 hours",
-      window_ : String = "1 hour", slide: String = "15 minutes"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_, slide), col("event_type"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))).cast("double") /
-        count(lit(1)).cast("double")).as("avg_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("avg_value"))
 
   /** Session windows per user with an inactivity gap. */
   def sessionize(events: DataFrame, gap: String = "30 minutes",

@@ -16,22 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Merge {
 
-  /** `INSERT ... ON CONFLICT (keys) DO UPDATE SET (updateCols)`
-    * rewrite (`etl/load/postgres_loader.py:77-80,118-123,154-159`):
-    *
-    *   - the incoming batch is deduplicated per key first
-    *     (last-writer-wins by `tiebreak` — Postgres would error on
-    *     in-batch conflicts, so any deterministic choice is a superset
-    *     of reference behavior);
-    *   - matched rows take `updateCols` from incoming and keep every
-    *     other column from the target (partial update);
-    *   - unmatched incoming rows are inserted whole;
-    *   - unmatched target rows pass through.
-    *
-    * One shuffle keyed on `keys` (the full-outer join); at scale the
-    * target side can be bucketed on the same keys to make the merge
-    * shuffle-free on one side.
-    */
   /** Incremental aggregate-view maintenance: merge a materialized
     * per-key aggregate STATE with the aggregate of a new delta batch
     * so the view never rescans the base table — the standard
@@ -69,14 +53,26 @@ object Merge {
         greatest(col("a_mx"), col("b_mx")).as("mx")): _*)
   }
 
+  /** `INSERT ... ON CONFLICT (keys) DO UPDATE SET (updateCols)`
+    * rewrite (`etl/load/postgres_loader.py:77-80,118-123,154-159`):
+    *
+    *   - the incoming batch is deduplicated per key first
+    *     (last-writer-wins by `tiebreak` — Postgres would error on
+    *     in-batch conflicts, so any deterministic choice is a superset
+    *     of reference behavior);
+    *   - matched rows take `updateCols` from incoming and keep every
+    *     other column from the target (partial update);
+    *   - unmatched incoming rows are inserted whole;
+    *   - unmatched target rows pass through.
+    *
+    * One shuffle keyed on `keys` (the full-outer join); at scale the
+    * target side can be bucketed on the same keys to make the merge
+    * shuffle-free on one side.
+    */
   def upsert(target: DataFrame, incoming: DataFrame, keys: Seq[String],
       updateCols: Seq[String], tiebreak: Seq[Column]): DataFrame = {
     val dataCols = target.columns.toSeq.filterNot(keys.contains)
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(tiebreak: _*)
-    val dedup = incoming
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    val s = dedup.select(
+    val s = firstPerKey(incoming, keys, tiebreak).select(
       (keys ++ dataCols).map(c => col(c).as(s"__s_$c")) :+
         lit(true).as("__s"): _*)
     val t = target
@@ -92,6 +88,15 @@ object Merge {
           when(col("__t").isNotNull, col(c)).otherwise(col(s"__s_$c")).as(c)
       }
     joined.select(out: _*)
+  }
+
+  /** The in-batch half of [[upsert]]: one row per key, the first by
+    * `tiebreak`. */
+  private def firstPerKey(incoming: DataFrame, keys: Seq[String],
+      tiebreak: Seq[Column]): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(tiebreak: _*)
+    incoming.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
   }
 
   /** Insert-only variant (`ON CONFLICT DO NOTHING`): incoming rows
@@ -148,13 +153,10 @@ object Merge {
     val hasData = fs.exists(p) && fs.listStatus(p)
       .exists(s => !s.getPath.getName.startsWith("_"))
     if (!hasData) {
-      // first load: per-key dedup (the in-batch half of upsert), all
-      // partitions staged fresh then swapped in
-      val w = Window.partitionBy(keys.map(col): _*).orderBy(tiebreak: _*)
-      val deduped = incoming.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      Writer.overwritePartitionsAtomic(deduped, path, partitionCols,
-        recoverFirst = false)
+      // first load: per-key dedup only, all partitions staged fresh
+      // then swapped in
+      Writer.overwritePartitionsAtomic(firstPerKey(incoming, keys, tiebreak),
+        path, partitionCols, recoverFirst = false)
       return
     }
     val touched = partRows.map(r => partitionCols.zipWithIndex
@@ -311,7 +313,7 @@ object DateDim {
       .select(date_add(lit(start).cast("date"),
         col("id").cast("int")).as("full_date"))
       .select(
-        date_format(d, "yyyyMMdd").cast("int").as("date_key"),
+        graft.functions.CleanFunctions.dateKey(d).as("date_key"),
         d,
         (dayofweek(d) - 1).as("day_of_week"),
         date_format(d, "EEEE").as("day_name"),

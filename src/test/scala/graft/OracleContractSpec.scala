@@ -8,99 +8,117 @@ import scala.util.Try
   * output column (pandas materializes those as object/float64 while
   * Spark emits int64, so the driver's dtype-sensitive value hash
   * fails on numerically identical results — the q212 rounds-12/13
-  * regression), and (c) return the same row count as the Spark side
-  * at sf0.001.
+  * regression), and (c) match the Spark side at sf0.001 in rows,
+  * schema, dtypes and value hash.
   *
-  * The DuckDB half runs through `tools/oracle_contract.py` (python3 +
-  * duckdb are driver-side tooling, not library dependencies); the
-  * whole suite cancels cleanly when that tooling or the corpus is
+  * All three assertions read one report: a `Verify.dump` at sf0.001
+  * followed by one `tools/check_oracle.py` pass, which executes each
+  * oracle in DuckDB once and prints one verdict line per oracle
+  * (python3 + duckdb are external tooling, not library dependencies).
+  * The whole suite cancels cleanly when that tooling or the corpus is
   * absent, so `sbt test` stays portable.
   */
 class OracleContractSpec extends SparkSpec {
+  import OracleContractSpec._
 
   private val sfDir = "/root/testdata/sf0.001"
-  private val tool = "tools/oracle_contract.py"
 
-  private def runDuck(): Option[Map[String, (Option[Long],
-      List[String], Option[String])]] = {
-    val oraclePath = Paths.get(tmpDir("graft-oracle"), "oracle_sql.json")
-    Files.writeString(oraclePath, Verify.oracleJson(SparkEntry.oracleSql))
-    val out = new StringBuilder
-    val cmd = Seq("python3", tool, sfDir, oraclePath.toString)
-    val code = Try {
-      import scala.sys.process._
-      cmd.!(ProcessLogger(line => out.append(line), _ => ()))
-    }.getOrElse(-1)
-    if (code != 0) return None
-    // minimal JSON parse for the fixed {"name": {"rows": N,
-    // "bad_types": [["c","T"],...]} | {"error": "..."}} shape
-    val json = out.toString
-    val entryRe =
-      """"(q\d+[a-z0-9_]*)":\s*\{([^{}]*)\}""".r
-    val rowsRe = """"rows":\s*(\d+)""".r
-    val errRe = """"error":\s*"((?:[^"\\]|\\.)*)"""".r
-    val badRe = """\["((?:[^"\\]|\\.)*)",\s*"((?:[^"\\]|\\.)*)"\]""".r
-    Some(entryRe.findAllMatchIn(json).map { m =>
-      val body = m.group(2)
-      val rows = rowsRe.findFirstMatchIn(body).map(_.group(1).toLong)
-      val err = errRe.findFirstMatchIn(body).map(_.group(1))
-      val bad = badRe.findAllMatchIn(body)
-        .map(b => s"${b.group(1)}:${b.group(2)}").toList
-      m.group(1) -> ((rows, bad, err))
-    }.toMap)
+  private lazy val gate: (Seq[String], Report) = {
+    val outDir = tmpDir("graft-verify-sf0001")
+    val failed = Verify.dump(spark, sfDir, outDir, _ => true)
+    (failed, runGate(sfDir, outDir))
   }
 
-  private lazy val duckSide = runDuck()
+  private def requireHarness(): Unit = {
+    assume(Files.exists(Paths.get(tool)),
+      "check_oracle.py not found (not running from repo root?)")
+    assume(Try(Runtime.getRuntime.exec(
+        Array("python3", "-c", "import duckdb, pandas, numpy")).waitFor())
+      .toOption.contains(0), "python3 + duckdb/pandas/numpy not available")
+  }
 
-  private def requireHarness(): Map[String, (Option[Long],
-      List[String], Option[String])] = {
+  private def requireGate(): (Seq[String], Report) = {
     assume(Files.isDirectory(Paths.get(sfDir)),
       s"corpus $sfDir not present")
-    assume(Files.exists(Paths.get(tool)),
-      "oracle_contract.py not found (not running from repo root?)")
-    assume(Try(Runtime.getRuntime.exec(
-        Array("python3", "-c", "import duckdb")).waitFor())
-      .toOption.contains(0), "python3 + duckdb not available")
-    val d = duckSide
-    assume(d.isDefined, "oracle_contract.py run failed")
-    d.get
+    requireHarness()
+    gate
   }
 
   test("every oracle parses and executes in DuckDB") {
-    val duck = requireHarness()
-    val errors = duck.collect { case (n, (_, _, Some(e))) => s"$n: $e" }
+    val report = requireGate()._2
+    val errors = report.withVerdict("DUCKERR")
     assert(errors.isEmpty, s"oracle SQL errors:\n${errors.mkString("\n")}")
-    val missing = SparkEntry.oracleSql.keySet -- duck.keySet
+    val missing = SparkEntry.oracleSql.keySet -- report.verdicts.keySet
     assert(missing.isEmpty, s"oracles not reported: $missing")
   }
 
   test("no oracle emits a HUGEINT-family output column") {
-    val duck = requireHarness()
-    val bad = duck.collect { case (n, (_, b, _)) if b.nonEmpty =>
-      s"$n: ${b.mkString(", ")}" }
+    val bad = requireGate()._2.withVerdict("TYPELINT")
     assert(bad.isEmpty,
       "HUGEINT-family oracle outputs (cast them to BIGINT — pandas " +
         s"cannot dtype-match them):\n${bad.mkString("\n")}")
   }
 
   test("full value-hash parity with DuckDB at sf0.001 (driver gate)") {
-    requireHarness() // same tooling preconditions (python3 + duckdb)
-    assume(Try(Runtime.getRuntime.exec(
-        Array("python3", "-c", "import pandas, numpy")).waitFor())
-      .toOption.contains(0), "pandas/numpy not available")
-    val outDir = tmpDir("graft-verify-sf0001")
-    val failed = Verify.dump(spark, sfDir, outDir, _ => true)
+    val (failed, report) = requireGate()
     assert(failed.isEmpty, s"queries failed to execute: $failed")
-    val out = new StringBuilder
+    assert(report.code == 0,
+      "check_oracle.py gate failed (rows/schema/dtype/hash):\n" +
+        report.failures)
+  }
+
+  test("check_oracle.py gives each broken oracle the verdict that " +
+      "fails its test") {
+    requireHarness()
+    import spark.implicits._
+    val dir = tmpDir("graft-oracle-neg")
+    val oracles = Map(
+      "good" -> "SELECT CAST(1 AS BIGINT) AS x",
+      "broken" -> "SELEC CAST(1 AS BIGINT) AS x",
+      "huge" -> "SELECT 1::HUGEINT AS x",
+      "changed" -> "SELECT CAST(2 AS BIGINT) AS x")
+    Files.writeString(Paths.get(dir, "oracle_sql.json"),
+      Verify.oracleJson(oracles))
+    for (name <- oracles.keys)
+      Seq(1L).toDF("x").coalesce(1).write.parquet(s"$dir/$name")
+    val report = runGate(dir, dir)
+    assert(report.verdicts == Map("good" -> "PASS", "broken" -> "DUCKERR",
+      "huge" -> "TYPELINT", "changed" -> "FAIL"), report.lines.mkString("\n"))
+    def names(keyword: String) =
+      report.withVerdict(keyword).map(_.takeWhile(_ != ':'))
+    assert(names("DUCKERR") == Seq("broken"))
+    assert(names("TYPELINT") == Seq("huge"))
+    assert(report.code != 0)
+  }
+}
+
+object OracleContractSpec {
+  private val tool = "tools/check_oracle.py"
+
+  private val verdictRe =
+    """^(PASS|FAIL|MISSING|ERROR|DUCKERR|TYPELINT)\s+([^\s:]+).*""".r
+
+  /** One `check_oracle.py` run: its exit code and its stdout and
+    * stderr lines. */
+  final case class Report(code: Int, lines: Seq[String]) {
+    /** Oracle name → verdict keyword, for every oracle reported. */
+    lazy val verdicts: Map[String, String] =
+      lines.collect { case verdictRe(keyword, name) => name -> keyword }.toMap
+    def failures: String = lines.filterNot(_.startsWith("PASS")).mkString("\n")
+    /** The `name: reason` tail of every line with this verdict. */
+    def withVerdict(keyword: String): Seq[String] =
+      lines.filter(_.startsWith(keyword + " "))
+        .map(_.stripPrefix(keyword).trim).sorted
+  }
+
+  def runGate(sfDir: String, outDir: String): Report = {
+    val lines = Seq.newBuilder[String]
     val code = Try {
       import scala.sys.process._
-      Seq("python3", "tools/check_oracle.py", sfDir, outDir)
-        .!(ProcessLogger(l => out.append(l).append('\n'),
-          l => out.append(l).append('\n')))
+      Seq("python3", tool, sfDir, outDir)
+        .!(ProcessLogger(l => lines.synchronized(lines += l): Unit,
+          l => lines.synchronized(lines += l): Unit))
     }.getOrElse(-1)
-    val report = out.toString.linesIterator
-      .filterNot(_.startsWith("PASS")).mkString("\n")
-    assert(code == 0,
-      s"check_oracle.py gate failed (rows/schema/dtype/hash):\n$report")
+    Report(code, lines.result())
   }
 }

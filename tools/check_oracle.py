@@ -5,6 +5,20 @@ hash).
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 
+Each oracle executes in DuckDB exactly once, before its Spark output is
+read, and gets exactly one verdict line on stdout, first match wins:
+
+  DUCKERR  <name>: the oracle fails to parse, bind or execute in DuckDB
+  TYPELINT <name>: an output column types in the HUGEINT family
+  MISSING  <name>: no Spark output directory
+  ERROR    <name>: the Spark output cannot be read
+  PASS     <name> (<rows> rows)
+  FAIL     <name>: rows, columns, dtypes or value hash differ
+           (indented detail lines may follow)
+
+The exit code is 1 when any oracle is not PASS. graft.OracleContractSpec
+asserts on these lines and on the exit code.
+
 Hardened after round 13: the old value_hash used DataFrame.iterrows(),
 which upcasts each row to a common dtype before repr() — an int64
 Spark column and a HUGEINT-derived object/float64 DuckDB column hashed
@@ -12,10 +26,9 @@ identically, so local PASS coexisted with a driver FAIL (q212, rounds
 12-13). This version:
   * compares pandas dtypes column-by-column and fails on mismatch;
   * hashes per-column numpy arrays (no cross-column coercion);
-  * lints every oracle's DuckDB output types via DESCRIBE for the
-    HUGEINT family (the one group pandas cannot materialize with a
-    Spark-matching dtype) so a HUGEINT sneaking into an oracle is a
-    named error before the Spark side even runs.
+  * lints every oracle's DuckDB output types for the HUGEINT family
+    (the one group pandas cannot materialize with a Spark-matching
+    dtype), so a HUGEINT sneaking into an oracle is a named error.
 """
 import sys, os, json, hashlib
 import duckdb
@@ -67,19 +80,19 @@ def value_hash(df: pd.DataFrame) -> str:
     return h.hexdigest()
 
 
-def lint_types(con, name, sql) -> list:
-    """Return a list of (column, duck_type) outside the allowlist."""
+def lint_types(rel) -> list:
+    """(column, duck_type) for each output column outside the allowlist."""
+    return [(c, str(t)) for c, t in zip(rel.columns, rel.types)
+            if str(t).split("(")[0].strip() in FORBIDDEN_DUCK_TYPES]
+
+
+def run_duck(con, sql):
+    """Execute one oracle: (frame, bad types, None) or (None, None, error)."""
     try:
-        desc = con.sql("DESCRIBE " + sql).df()
+        rel = con.sql(sql)
+        return canon(rel.df()), lint_types(rel), None
     except Exception as e:
-        return [("<describe failed>", str(e))]
-    bad = []
-    for _, r in desc.iterrows():
-        t = r["column_type"]
-        base = t.split("(")[0].strip()
-        if base in FORBIDDEN_DUCK_TYPES:
-            bad.append((r["column_name"], t))
-    return bad
+        return None, None, str(e).split("\n")[0]
 
 
 def main(sf_dir, out_dir):
@@ -91,12 +104,17 @@ def main(sf_dir, out_dir):
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = n_lint = 0
     for name, sql in sorted(oracles.items()):
-        bad_types = lint_types(con, name, sql)
+        want, bad_types, duck_error = run_duck(con, sql)
+        if duck_error is not None:
+            print(f"DUCKERR  {name}: {duck_error}")
+            n_fail += 1
+            continue
         if bad_types:
             print(f"TYPELINT {name}: oracle output types {bad_types} "
                   f"(HUGEINT-family lands as pandas object/float64 vs "
                   f"Spark int64 and breaks the driver's value hash)")
             n_lint += 1
+            continue
         spark_path = f"{out_dir}/{name}"
         if not os.path.isdir(spark_path):
             print(f"MISSING  {name}: no spark output")
@@ -104,7 +122,6 @@ def main(sf_dir, out_dir):
             continue
         try:
             got = canon(pd.read_parquet(spark_path))
-            want = canon(con.sql(sql).df())
         except Exception as e:
             print(f"ERROR    {name}: {e}")
             n_fail += 1
