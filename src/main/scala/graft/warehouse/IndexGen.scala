@@ -39,7 +39,7 @@ object IndexGen {
 
   private def fs(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    (graft.util.LocalFs.fileSystem(spark, p), p)
   }
 
   private def gensDir(root: org.apache.hadoop.fs.Path) =

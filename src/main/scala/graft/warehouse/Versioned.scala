@@ -2,6 +2,8 @@ package graft.warehouse
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.util.LocalFs
+
 /** Manifest-based table versioning — snapshot isolation and time
   * travel for a parquet lake, the Iceberg/Delta core idea at library
   * size. The reference keeps one mutable PostgreSQL state
@@ -69,9 +71,11 @@ object Versioned {
     * guarantee; see VersionedSpec's 10k-commit case. */
   private[graft] val metaOps = new java.util.concurrent.atomic.AtomicLong
 
+  /** Handles and segment writes go through [[graft.util.LocalFs]], so
+    * manifests, hints and segments fork no `chmod` on `file:`. */
   private def fs(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    (LocalFs.fileSystem(spark, p), p)
   }
 
   private def manifestDir(root: org.apache.hadoop.fs.Path) =
@@ -264,7 +268,8 @@ object Versioned {
       val parent = latestFrom(f, root)
       val v = parent.getOrElse(0L) + 1L
       val segRel = f"data/seg-$v%05d-${nonce()}"
-      df.write.mode("errorifexists").parquet(s"$path/$segRel")
+      df.write.mode("errorifexists").options(LocalFs.options)
+        .parquet(s"$path/$segRel")
       val live =
         if (overwrite || parent.isEmpty) Seq(segRel)
         else readManifest(f, root, parent.get) :+ segRel
@@ -386,7 +391,8 @@ object Versioned {
       else smallDf.coalesce(numFiles.getOrElse(1))
     val v = latest + 1L
     val segRel = f"data/seg-$v%05d-${nonce()}"
-    packed.write.mode("errorifexists").parquet(s"$path/$segRel")
+    packed.write.mode("errorifexists").options(LocalFs.options)
+      .parquet(s"$path/$segRel")
     // compaction does NOT retry a lost claim: a concurrent append
     // means the snapshot this binpack was computed from is stale —
     // the caller's next maintenance run re-plans against fresh sizes

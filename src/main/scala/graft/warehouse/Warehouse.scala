@@ -147,7 +147,7 @@ object Merge {
     // a mid-swap-emptied table for a first load
     Writer.recoverPartitions(spark, path, partitionCols)
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.util.LocalFs.fileSystem(spark, p)
     // a directory holding no data files (e.g. the debris of a crashed
     // commit: _SUCCESS / _temporary only) counts as absent
     val hasData = fs.exists(p) && fs.listStatus(p)

@@ -3,12 +3,22 @@ package graft.warehouse
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.LocalFs
+
 /** Partitioned lake writers — the Spark analogue of the reference's
   * monthly RANGE partitioning of `fact_weather` (W7,
   * `db/init/01-schema.sql:139-181`): physical layout comes from
   * `partitionBy` at write time and partition pruning at read time, so
   * there is no DDL to maintain and no plpgsql partition-creation loop
   * to port.
+  *
+  * Every path-based write here carries [[graft.util.LocalFs.options]]
+  * and every `FileSystem` handle comes from
+  * [[graft.util.LocalFs.fileSystem]], so creating files and
+  * directories on `file:` forks no `chmod`. [[writeBucketed]] is the
+  * exception on both counts: `saveAsTable` would persist its write
+  * options into the table's properties, and its handle only probes
+  * and deletes.
   */
 object Writer {
 
@@ -19,7 +29,7 @@ object Writer {
     fact
       .withColumn("part_year", (col(dateKeyCol) / 10000).cast("int"))
       .withColumn("part_month", (col(dateKeyCol) / 100 % 100).cast("int"))
-      .write.mode(mode)
+      .write.mode(mode).options(LocalFs.options)
       .partitionBy("part_year", "part_month")
       .parquet(path)
 
@@ -235,7 +245,7 @@ object Writer {
     val spark = fact.sparkSession
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try fact.write.mode(SaveMode.Overwrite)
+    try fact.write.mode(SaveMode.Overwrite).options(LocalFs.options)
       .partitionBy(partitionCols: _*).parquet(path)
     finally prev match {
       case Some(v) =>
@@ -279,7 +289,7 @@ object Writer {
       partitionCols: Seq[String], recoverFirst: Boolean = true): Unit = {
     val spark = fact.sparkSession
     val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fileSystem(spark, target)
     // callers that already ran recoverPartitions (read-merge-write
     // flows must, before their target read) skip the redundant second
     // parent-dir listing
@@ -289,13 +299,16 @@ object Writer {
       s".${target.getName}__stage__$id")
     val trash = new org.apache.hadoop.fs.Path(target.getParent,
       s".${target.getName}__old__$id")
-    try fact.write.mode(SaveMode.Overwrite)
+    try fact.write.mode(SaveMode.Overwrite).options(LocalFs.options)
       .partitionBy(partitionCols: _*).parquet(stage.toString)
     catch { case e: Throwable => fs.delete(stage, true); throw e }
     var swapStarted = false
     try {
       val rels = leafPartitionRels(fs, stage, partitionCols.length)
-      if (!fs.exists(target)) fs.mkdirs(target)
+      // an empty frame stages no partition: creating the target anyway
+      // would leave a data-less directory that later reads cannot
+      // infer a schema from
+      if (rels.nonEmpty && !fs.exists(target)) fs.mkdirs(target)
       rels.foreach { rel =>
         swapStarted = true
         val dest = new org.apache.hadoop.fs.Path(target, rel)
@@ -352,7 +365,7 @@ object Writer {
   def recoverPartitions(spark: SparkSession, path: String,
       partitionCols: Seq[String]): Unit = {
     val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fileSystem(spark, target)
     recoverSwapDebris(fs, target, partitionCols.length)
   }
 
@@ -475,7 +488,7 @@ object Writer {
       .repartitionByRange(partitions, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
+      .write.mode(SaveMode.Overwrite).options(LocalFs.options).parquet(path)
 
   /** Export a corpus as sharded JSONL (the interchange format LLM
     * training loaders consume) and read it straight back. Shard
@@ -501,7 +514,7 @@ object Writer {
     // one file per shard, which is the export contract's point
     docs.withColumn("shard", pmod(col(idCol), lit(shards.toLong)))
       .repartition(col("shard"))
-      .write.mode(SaveMode.Overwrite)
+      .write.mode(SaveMode.Overwrite).options(LocalFs.options)
       .partitionBy("shard").json(path)
     spark.read.schema(
         docs.withColumn("shard", pmod(col(idCol), lit(shards.toLong)))

@@ -4,10 +4,11 @@ import java.nio.file.{Files, Paths}
 import scala.util.Try
 
 /** Opt-in driver-scale gate: the IDENTICAL check_oracle.py
-  * rows/schema/dtype/value-hash pass as [[OracleContractSpec]], but
-  * at sf0.01 — the scale factor the per-round driver verdict actually
-  * runs. The one failure class the standing sf0.001 gate cannot catch
-  * is scale-dependent plan or parameter behavior (a broadcast
+  * rows/schema/dtype/value-hash pass as [[OracleContractSpec]] (its
+  * `runGate` call and `Report.failures` filter), but at sf0.01 — the
+  * scale factor the full correctness check runs at. The one
+  * failure class the standing sf0.001 gate cannot catch is
+  * scale-dependent plan or parameter behavior (a broadcast
   * threshold crossed only at sf0.01, a COUNT(*)-gated oracle branch
   * that flips between the two corpora — e.g. the q241/q251/q256
   * auto-width gates and q255's trained codebook).
@@ -33,16 +34,8 @@ class OracleGateSf01Spec extends SparkSpec {
     val outDir = tmpDir("graft-verify-sf001gate")
     val failed = Verify.dump(spark, sfDir, outDir, _ => true)
     assert(failed.isEmpty, s"queries failed to execute: $failed")
-    val out = new StringBuilder
-    val code = Try {
-      import scala.sys.process._
-      Seq("python3", "tools/check_oracle.py", sfDir, outDir)
-        .!(ProcessLogger(l => out.append(l).append('\n'),
-          l => out.append(l).append('\n')))
-    }.getOrElse(-1)
-    val report = out.toString.linesIterator
-      .filterNot(_.startsWith("PASS")).mkString("\n")
-    assert(code == 0,
-      s"check_oracle.py sf0.01 gate failed:\n$report")
+    val report = OracleContractSpec.runGate(sfDir, outDir)
+    assert(report.code == 0,
+      s"check_oracle.py sf0.01 gate failed:\n${report.failures}")
   }
 }

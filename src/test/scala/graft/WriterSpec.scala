@@ -184,6 +184,21 @@ class WriterSpec extends SparkSpec {
     assert(parent.listFiles().map(_.getName).toSeq == Seq("t"))
   }
 
+  test("atomic swap: an empty frame leaves no directory at a fresh path") {
+    val base = tmpDir("graft_atomempty")
+    val dir = base + "/t"
+    val schema = Seq((20240101, 1L, 5.0))
+      .toDF("date_key", "location_key", "temp")
+      .withColumn("part_day", col("date_key"))
+    Writer.overwritePartitionsAtomic(schema.limit(0), dir, Seq("part_day"))
+    assert(new java.io.File(base).list().isEmpty,
+      "an empty write left a data-less target or staging debris")
+    Writer.overwritePartitionsAtomic(schema, dir, Seq("part_day"))
+    val got = spark.read.parquet(dir).select("date_key", "temp").collect()
+      .map(r => (r.getInt(0), r.getDouble(1)))
+    assert(got.toSeq == Seq((20240101, 5.0)))
+  }
+
   test("atomic swap: a batch failing mid-write leaves the target " +
       "byte-identical and readable") {
     val dir = tmpDir("graft_atomfail") + "/t"
