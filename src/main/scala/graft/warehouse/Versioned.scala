@@ -2,7 +2,7 @@ package graft.warehouse
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.util.LocalFs
+import graft.util.{LocalFs, PinnedParquet}
 
 /** Manifest-based table versioning — snapshot isolation and time
   * travel for a parquet lake, the Iceberg/Delta core idea at library
@@ -38,6 +38,11 @@ import graft.util.LocalFs
   * overwrites reference only the new one. Old versions stay readable
   * until a retention job deletes their manifests and unreferenced
   * segments.
+  *
+  * Reads ([[read]], [[readDelta]] and [[compact]]'s scan) pin their
+  * schema from one parquet footer read on the driver
+  * ([[graft.util.PinnedParquet]]), the footer Spark's inference job
+  * would read, so building a snapshot frame launches no Spark job.
   *
   * Scale shape: manifests are O(live segments) lines of text (bounded
   * by [[compact]] under a compacting sink); latest-version resolution
@@ -383,7 +388,7 @@ object Versioned {
     // pure rewrite with no fan-in - skip it
     if (smallerThanBytes != Long.MaxValue && small.size < 2)
       return latest
-    val smallDf = spark.read.parquet(
+    val smallDf = PinnedParquet.read(spark,
       small.map { case (rel, _) => s"$path/$rel" }: _*)
     val packed =
       if (numFiles.isEmpty && big.isEmpty && smallerThanBytes == Long.MaxValue)
@@ -467,7 +472,7 @@ object Versioned {
       }
     require(added.nonEmpty,
       s"Versioned.readDelta: version $version added no segments")
-    spark.read.parquet(added.map(rel => s"$path/$rel"): _*)
+    PinnedParquet.read(spark, added.map(rel => s"$path/$rel"): _*)
   }
 
   /** Snapshot read — the given version, or the latest when
@@ -478,6 +483,6 @@ object Versioned {
     val (f, root) = fs(spark, path)
     val segs = readManifest(f, root, resolve(f, root, version, "read", path))
       .map(rel => s"$path/$rel")
-    spark.read.parquet(segs: _*)
+    PinnedParquet.read(spark, segs: _*)
   }
 }

@@ -1,8 +1,12 @@
 package graft.warehouse
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.util.PinnedParquet
 
 /** Warehouse-shaping operators (SURVEY §2.1 S10–S15, §2.4, §2.5 J6):
   * the Spark rewrites of the reference's PostgreSQL `ON CONFLICT`
@@ -65,30 +69,41 @@ object Merge {
     *   - unmatched incoming rows are inserted whole;
     *   - unmatched target rows pass through.
     *
-    * One shuffle keyed on `keys` (the full-outer join); at scale the
-    * target side can be bucketed on the same keys to make the merge
-    * shuffle-free on one side.
+    * One shuffle per side, both keyed on the non-null `struct(keys)`:
+    * the in-batch dedup window and the full-outer join share the
+    * batch's exchange. Struct equality matches null fields, so a null
+    * key merges with a null key exactly as `<=>` would, and the key
+    * travels only inside the struct. At scale the target side can be
+    * bucketed on the same keys to make the merge shuffle-free on one
+    * side.
     */
   def upsert(target: DataFrame, incoming: DataFrame, keys: Seq[String],
       updateCols: Seq[String], tiebreak: Seq[Column]): DataFrame = {
     val dataCols = target.columns.toSeq.filterNot(keys.contains)
-    val s = firstPerKey(incoming, keys, tiebreak).select(
-      (keys ++ dataCols).map(c => col(c).as(s"__s_$c")) :+
+    // both sides' keys typed as nullable fields: a nullability mismatch
+    // would make the join cast one side's key and shuffle it again
+    def key(df: DataFrame): Column = struct(keys.map(col): _*).cast(
+      StructType(df.select(keys.map(col): _*).schema
+        .map(_.copy(nullable = true))))
+    val s = firstPerKey(incoming.withColumn(Key, key(incoming)), Seq(Key),
+        tiebreak)
+      .select(col(Key) +: dataCols.map(c => col(c).as(s"__s_$c")) :+
         lit(true).as("__s"): _*)
-    val t = target
-      .select((keys ++ dataCols).map(col) :+ lit(true).as("__t"): _*)
-    val cond = keys.map(k => t(k) <=> s(s"__s_$k")).reduce(_ && _)
-    val joined = t.join(s, cond, "full_outer")
-    val out = keys.map(k =>
-      coalesce(col(k), col(s"__s_$k")).as(k)) ++
+    val t = target.select(key(target).as(Key) +: dataCols.map(col) :+
+      lit(true).as("__t"): _*)
+    // a full-outer USING join coalesces the two sides' keys into one
+    val out = keys.map(k => col(Key).getField(k).as(k)) ++
       dataCols.map { c =>
         if (updateCols.contains(c))
           when(col("__s").isNotNull, col(s"__s_$c")).otherwise(col(c)).as(c)
         else
           when(col("__t").isNotNull, col(c)).otherwise(col(s"__s_$c")).as(c)
       }
-    joined.select(out: _*)
+    t.join(s, Seq(Key), "full_outer").select(out: _*)
   }
+
+  /** The merge key column of [[upsert]]: `struct(keys)`. */
+  private val Key = "__k"
 
   /** The in-batch half of [[upsert]]: one row per key, the first by
     * `tiebreak`. */
@@ -122,8 +137,13 @@ object Merge {
     * date_key → part_year/part_month). A key that changed partitions
     * between loads would leave its old copy in an unread partition.
     *
-    * The only driver-side collect is the distinct partition *tuples*
-    * of the batch (bounded by touched-partition count, never data).
+    * A first load (no data at `path`) collects nothing: it dedups the
+    * batch per key and stages it whole. A later batch collects its
+    * distinct partition *tuples* (bounded by touched-partition count,
+    * never data) in one single-stage job: each task drops its own
+    * duplicates and the driver drops the rest, with no exchange. The
+    * target is then read with its schema pinned from one footer
+    * ([[graft.util.PinnedParquet]]), so no inference job runs either.
     * Writes go through [[Writer.overwritePartitionsAtomic]]: the merged
     * result is staged to a hidden sibling directory first (so the
     * target scan and the write never overlap on the same path), then
@@ -135,12 +155,6 @@ object Merge {
   def upsertPartitioned(spark: SparkSession, path: String,
       incoming: DataFrame, keys: Seq[String], updateCols: Seq[String],
       tiebreak: Seq[Column], partitionCols: Seq[String]): Unit = {
-    // an empty batch is a no-op on BOTH branches — writing it on first
-    // load would create a data-less directory that poisons every later
-    // read ("unable to infer schema")
-    val partRows = incoming
-      .select(partitionCols.map(col): _*).distinct().collect()
-    if (partRows.isEmpty) return
     // restore any partition a previously crashed swap parked in a
     // trash dir BEFORE reading the target — the scan's file index is
     // built at read time, and the hasData probe below must not mistake
@@ -154,15 +168,22 @@ object Merge {
       .exists(s => !s.getPath.getName.startsWith("_"))
     if (!hasData) {
       // first load: per-key dedup only, all partitions staged fresh
-      // then swapped in
+      // then swapped in; an empty batch stages no partition and
+      // creates no directory that would poison later reads
       Writer.overwritePartitionsAtomic(firstPerKey(incoming, keys, tiebreak),
         path, partitionCols, recoverFirst = false)
       return
     }
+    val tuples = incoming.select(partitionCols.map(col): _*)
+    val partRows = tuples
+      .mapPartitions(_.toSet.iterator)(Encoders.row(tuples.schema))
+      .collect().distinct
+    // an empty batch leaves the target untouched
+    if (partRows.isEmpty) return
     val touched = partRows.map(r => partitionCols.zipWithIndex
         .map { case (c, i) => col(c) <=> lit(r.get(i)) }.reduce(_ && _))
       .reduce(_ || _)
-    val target = spark.read.parquet(path).filter(touched)
+    val target = PinnedParquet.read(spark, path).filter(touched)
     val merged = upsert(target, incoming, keys, updateCols, tiebreak)
     Writer.overwritePartitionsAtomic(merged, path, partitionCols,
       recoverFirst = false)

@@ -3,7 +3,7 @@ package graft.warehouse
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.LocalFs
+import graft.util.{LocalFs, PinnedParquet}
 
 /** Partitioned lake writers — the Spark analogue of the reference's
   * monthly RANGE partitioning of `fact_weather` (W7,
@@ -19,6 +19,13 @@ import graft.util.LocalFs
   * exception on both counts: `saveAsTable` would persist its write
   * options into the table's properties, and its handle only probes
   * and deletes.
+  *
+  * Path reads ([[readPartitioned]], [[compactPartitions]]) pin their
+  * data schema from one parquet footer read on the driver
+  * ([[graft.util.PinnedParquet]]) instead of running Spark's
+  * schema-inference job; partition columns are still inferred from
+  * the directory names. [[readEvolved]] merges every footer and keeps
+  * Spark's inference.
   */
 object Writer {
 
@@ -36,7 +43,7 @@ object Writer {
   /** Read back with partition pruning available on part_year /
     * part_month. */
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    PinnedParquet.read(spark, path)
 
   /** Schema-evolution-tolerant read of a lake table whose batches were
     * written over time with ADDED columns: `mergeSchema` unions the
@@ -428,7 +435,7 @@ object Writer {
     // and land through the ATOMIC swap — compaction rewrites partitions
     // wholesale, exactly the shape the torn-partition window hurts most
     recoverPartitions(spark, path, partitionCols)
-    val touched = spark.read.parquet(path).filter(predicate)
+    val touched = PinnedParquet.read(spark, path).filter(predicate)
     val distributed =
       if (filesPerPartition <= 1)
         touched.repartition(partitionCols.map(col): _*)

@@ -18,6 +18,9 @@ class VersionedSpec extends SparkSpec {
     assert(xs(1) === Seq(1, 2))
     assert(xs(2) === Seq(1, 2, 3)) // append keeps parent segments
     assert(xs(3) === Seq(9))       // overwrite replaces the table
+    // the schema is pinned from a footer: building a read runs no job
+    assert(jobsLaunchedBy { Versioned.read(spark, path, Some(2L)): Unit } == 0)
+    assert(jobsLaunchedBy { Versioned.read(spark, path): Unit } == 0)
     // latest = v3; old snapshots still readable after the overwrite
     assert(Versioned.read(spark, path).as[Int].collect().toSeq === Seq(9))
     assert(xs(2) === Seq(1, 2, 3))
@@ -197,6 +200,7 @@ class VersionedSpec extends SparkSpec {
     assert(d(1) === Seq(1, 2))
     assert(d(2) === Seq(3))   // only the appended segment, not 1+2+3
     assert(d(3) === Seq(9))   // overwrite: the added segment
+    assert(jobsLaunchedBy { Versioned.readDelta(spark, path, 2L): Unit } == 0)
     intercept[IllegalArgumentException] { d(7) }
   }
 

@@ -30,26 +30,76 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("J6 upsert: partial update, insert, passthrough") {
-    val target = Seq((1, "alice", 10.0), (2, "bob", 20.0))
+    val target = Seq((Some(1), "alice", 10.0), (Some(2), "bob", 20.0),
+        (None, "nobody", 0.0))
       .toDF("id", "name", "bal")
-    val incoming = Seq((2, "BOB2", 99.0), (3, "carol", 30.0))
+    val incoming = Seq((Some(2), "BOB2", 99.0), (Some(3), "carol", 30.0),
+        (None, "NOBODY2", 1.0))
       .toDF("id", "name", "bal")
     val out = Merge.upsert(target, incoming, Seq("id"), Seq("bal"),
       Seq(col("name").desc)).orderBy("id")
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getDouble(2)))
+      .collect().map(r => (Option(r.get(0)), r.getString(1), r.getDouble(2)))
     assert(out.toSeq == Seq(
-      (1, "alice", 10.0),   // untouched
-      (2, "bob", 99.0),     // bal updated, name kept (partial update)
-      (3, "carol", 30.0)))  // inserted whole
+      (None, "nobody", 1.0),  // null key matches null key: one row
+      (Some(1), "alice", 10.0),   // untouched
+      (Some(2), "bob", 99.0),     // bal updated, name kept (partial update)
+      (Some(3), "carol", 30.0)))  // inserted whole
+    // two-column key: a null field matches only a row whose same field
+    // is null and whose other field is equal
+    val t2 = Seq((Some(1), Some("a"), 1.0), (Some(1), None, 2.0),
+        (None, Some("a"), 3.0))
+      .toDF("k1", "k2", "bal")
+    val i2 = Seq((Some(1), None: Option[String], 20.0),
+        (None, Some("b"), 40.0))
+      .toDF("k1", "k2", "bal")
+    val out2 = Merge.upsert(t2, i2, Seq("k1", "k2"), Seq("bal"),
+      Seq(col("bal").desc)).collect()
+      .map(r => ((Option(r.get(0)), Option(r.get(1))), r.getDouble(2)))
+    assert(out2.toMap == Map(
+      (Some(1), Some("a")) -> 1.0, (Some(1), None) -> 20.0,
+      (None, Some("a")) -> 3.0, (None, Some("b")) -> 40.0))
+    assert(out2.length == 4)
   }
 
   test("J6 upsert: in-batch duplicates collapse last-writer first") {
-    val target = Seq((1, "a", 1.0)).toDF("id", "name", "bal")
-    val incoming = Seq((1, "x", 5.0), (1, "z", 7.0))
+    val target = Seq((Some(1), "a", 1.0), (None, "n", 2.0))
+      .toDF("id", "name", "bal")
+    val incoming = Seq((Some(1), "x", 5.0), (Some(1), "z", 7.0),
+        (None, "p", 8.0), (None, "q", 9.0))
       .toDF("id", "name", "bal")
     val out = Merge.upsert(target, incoming, Seq("id"), Seq("bal"),
-      Seq(col("name").desc)).collect()(0)
-    assert(out.getDouble(2) == 7.0) // 'z' row wins the tiebreak
+      Seq(col("name").desc)).collect()
+      .map(r => Option(r.get(0)) -> r.getDouble(2))
+    assert(out.length == 2)
+    assert(out.toMap == Map(
+      Some(1) -> 7.0, // 'z' row wins the tiebreak
+      None -> 9.0))   // so does 'q' among the null-key duplicates
+  }
+
+  test("J6 upsert: the dedup window and the join share one exchange " +
+      "per side") {
+    // a parquet target's key is nullable, the batch's is not
+    val dir = tmpDir("j6_plan") + "/t"
+    Seq((1, "a", 1.0), (2, "b", 2.0)).toDF("id", "name", "bal")
+      .write.parquet(dir)
+    val target = spark.read.parquet(dir)
+    val incoming = Seq((1, "x", 5.0), (1, "z", 7.0), (3, "c", 3.0))
+      .toDF("id", "name", "bal")
+    val out = Merge.upsert(target, incoming, Seq("id"), Seq("bal"),
+      Seq(col("name").desc))
+    out.collect(): Unit
+    val aqe = new org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper {}
+    val joins = aqe.collect(out.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+    }
+    assert(joins.size == 1)
+    Seq(joins.head.left, joins.head.right).foreach { side =>
+      val exchanges = aqe.collect(side) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }
+      assert(exchanges.size == 1, s"exchanges under one side:\n$side")
+    }
   }
 
   test("S15 insertIfAbsent drops conflicting keys") {

@@ -19,7 +19,9 @@ class WriterSpec extends SparkSpec {
     val years = new java.io.File(dir).list().filter(_.startsWith("part_year="))
     assert(years.toSet == Set("part_year=2024", "part_year=2025"))
 
-    val pruned = Writer.readPartitioned(spark, dir)
+    var read: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy { read = Writer.readPartitioned(spark, dir) } == 0)
+    val pruned = read
       .filter(col("part_year") === 2024 && col("part_month") === 1)
     assert(pruned.count() == 1)
     // the partition filter must reach the scan, not a post-filter
@@ -133,9 +135,13 @@ class WriterSpec extends SparkSpec {
     val inc = Seq((3L, 20240210, 70.0, "IGNORED"), (30L, 20240215, 9.0, "N"))
       .toDF("k", "date_key", "v", "status")
       .withColumn("part_month", (col("date_key") / 100 % 100).cast("int"))
-    Merge.upsertPartitioned(spark, dir, inc, keys = Seq("k"),
-      updateCols = Seq("v"), tiebreak = Seq(col("status").desc),
-      partitionCols = Seq("part_month"))
+    def upsert(at: String, batch: org.apache.spark.sql.DataFrame): Int =
+      jobsLaunchedBy(Merge.upsertPartitioned(spark, at, batch,
+        keys = Seq("k"), updateCols = Seq("v"),
+        tiebreak = Seq(col("status").desc), partitionCols = Seq("part_month")))
+    // one single-stage collect of the touched months, then the merge
+    // write: one exchange per side and the write itself
+    assert(upsert(dir, inc) == 4)
     // untouched partitions: same files, same bytes
     assert(files("part_month=1") == before1)
     assert(files("part_month=3") == before3)
@@ -145,23 +151,23 @@ class WriterSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
     assert(got.toSeq == Seq((1L, 5.0, "A"), (2L, 6.0, "A"),
       (3L, 70.0, "B"), (4L, 8.0, "C"), (30L, 9.0, "N")))
+    // an empty batch on an existing target: every partition keeps its bytes
+    val months = Seq("part_month=1", "part_month=2", "part_month=3")
+    val beforeEmpty = months.map(files)
+    upsert(dir, inc.filter(lit(false)))
+    assert(months.map(files) == beforeEmpty)
     // first-load path: nonexistent target is written whole
     val fresh = tmpDir("graft_pmerge_f") + "/t"
-    Merge.upsertPartitioned(spark, fresh, inc, keys = Seq("k"),
-      updateCols = Seq("v"), tiebreak = Seq(col("status").desc),
-      partitionCols = Seq("part_month"))
+    // a first load collects nothing: the dedup exchange and the write
+    assert(upsert(fresh, inc) == 2)
     assert(spark.read.parquet(fresh).count() == 2)
     // empty first batch: no-op — must NOT create a data-less directory
     // that would poison later reads
     val none = tmpDir("graft_pmerge_e") + "/t"
-    Merge.upsertPartitioned(spark, none, inc.filter(lit(false)),
-      keys = Seq("k"), updateCols = Seq("v"),
-      tiebreak = Seq(col("status").desc), partitionCols = Seq("part_month"))
+    upsert(none, inc.filter(lit(false)))
     assert(!new java.io.File(none).exists())
     // and a later real batch still initializes the table
-    Merge.upsertPartitioned(spark, none, inc, keys = Seq("k"),
-      updateCols = Seq("v"), tiebreak = Seq(col("status").desc),
-      partitionCols = Seq("part_month"))
+    upsert(none, inc)
     assert(spark.read.parquet(none).count() == 2)
   }
 
